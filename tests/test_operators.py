@@ -131,6 +131,24 @@ def test_cosine_topk_self_similarity(spark):
     assert all(r.neighbor_id != r.qid for r in rows)
 
 
+def test_cosine_topk_ignores_extra_caller_columns(spark):
+    """Caller columns never reach the cross join: an embeddings frame
+    that also carries a `qid` column (ambiguous against the query side
+    before projection) gives the same neighbors as without it."""
+    e = spark.createDataFrame(
+        [(i, [float(i), float(i % 3), 1.0]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    q = e.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    want = sorted(tuple(r) for r in similarity.cosine_topk(e, q, k=3).collect())
+    wide = e.withColumn("qid", -F.col("vec_id"))
+    got = sorted(tuple(r) for r in similarity.cosine_topk(wide, q, k=3).collect())
+    assert got == want
+    assert len(want) == 9
+
+
 def test_lsh_topk_bucket_invariant(spark):
     e = embs(spark)
     q = e.filter(F.col("vec_id") < 2).select(

@@ -13,6 +13,13 @@ from wikidata_sparql_history_spark.pipeline.ordering import ordered_turns
 
 N_CONV = 40
 
+STAGES = [
+    "turns", "ranges", "triples", "adjacency", "dictionary",
+    "triples_encoded", "entity_terms",
+    "statements", "statement_qualifiers", "statement_references",
+]
+RANGE_COLS = ["conv_id", "subj", "pred", "obj", "range_start", "range_end"]
+
 
 def expected_facts_py(n_conv: int):
     """Closed-form expected canonical per-turn facts — independent
@@ -49,7 +56,10 @@ def test_pipeline_end_to_end(spark, tmp_path):
         candidates=synth.candidate_dict(spark),
         aliases=synth.alias_edges(spark),
     )
-    assert set(res.stages_run) >= {"turns", "mentions", "linked", "ranges", "triples"}
+    assert res.stages_run == STAGES
+    # ranges come from the fused plan: no intermediate fact tables
+    assert not os.path.exists(os.path.join(out, "mentions"))
+    assert not os.path.exists(os.path.join(out, "linked"))
 
     # P/R vs closed-form expected per-turn facts (explode ranges back
     # to per-turn presence via the turns table)
@@ -94,15 +104,14 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     t = synth.transcripts(spark, 10)
     first = run_pipeline(spark, t, out)
     assert first.stages_skipped == []
-    # simulate crash after 'mentions': delete everything downstream
+    # simulate crash after 'turns': delete everything downstream
     import shutil
 
-    for name in ("linked", "ranges", "triples", "adjacency"):
-        shutil.rmtree(os.path.join(out, name), ignore_errors=True)
+    for name in first.stages_run[1:]:
+        shutil.rmtree(os.path.join(out, name))
     second = run_pipeline(spark, t, out, resume=True)
-    assert "turns" in second.stages_skipped
-    assert "mentions" in second.stages_skipped
-    assert "ranges" in second.stages_run
+    assert second.stages_skipped == ["turns"]
+    assert second.stages_run == first.stages_run[1:]
 
     # resumed output identical to a fresh run
     fresh = run_pipeline(spark, t, str(tmp_path / "kg3"))
@@ -111,6 +120,37 @@ def test_resume_skips_completed_stages(spark, tmp_path):
     b = fresh.table(spark, "ranges").orderBy("conv_id", "subj", "pred", "obj",
                                              "range_start")
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
+
+
+def test_ranges_table_is_construct_ranges(spark, tmp_path):
+    """The store's ranges ARE the fused plan's output, row for row with
+    start_ts, and keep the input's ts type: a parquet input written
+    without a time zone reads ts as TIMESTAMP_NTZ, and the table's
+    start_ts stays NTZ."""
+    from wikidata_sparql_history_spark.pipeline.construct import construct_ranges
+
+    src = str(tmp_path / "transcripts")
+    synth.transcripts(spark, 20).withColumn(
+        "ts", F.col("ts").cast("timestamp_ntz")
+    ).write.parquet(src)
+    t = spark.read.parquet(src)
+    assert t.schema["ts"].dataType.simpleString() == "timestamp_ntz"
+    cand, ali = synth.candidate_dict(spark), synth.alias_edges(spark)
+    res = run_pipeline(spark, t, str(tmp_path / "kg"), cand, ali)
+    ranges = res.table(spark, "ranges")
+    assert [(f.name, f.dataType.simpleString()) for f in ranges.schema] == [
+        ("conv_id", "string"), ("subj", "string"), ("pred", "string"),
+        ("obj", "string"), ("range_start", "bigint"), ("range_end", "bigint"),
+        ("start_ts", "timestamp_ntz"),
+    ]
+
+    def rows(df):
+        us = F.unix_micros(F.col("start_ts").cast("timestamp"))
+        return sorted(tuple(r) for r in df.select(*RANGE_COLS, us).collect())
+
+    want = rows(construct_ranges(spark, t, cand, ali))
+    assert len(want) > 0
+    assert rows(ranges) == want
 
 
 def test_per_turn_text_invariant(spark):

@@ -96,12 +96,14 @@ def cosine_topk(
     # expression recomputed them per PAIR (Q×N interpreted-HOF norm
     # evaluations instead of Q+N; guide §1.2 per-task work). Same cast,
     # same FP operations on the same row values → bit-identical cosine,
-    # identical ranking.
-    emb = embeddings.withColumn(
-        "_e", F.col("embedding").cast("array<double>")
+    # identical ranking. Each side is projected to id, vector and norm
+    # first: caller columns never reach the cross join (no name clash
+    # with the other side, nothing extra broadcast).
+    emb = embeddings.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("_e")
     ).withColumn("_en", _norm(F.col("_e")))
-    qry = queries.withColumn(
-        "_q", F.col("qvec").cast("array<double>")
+    qry = queries.select(
+        "qid", F.col("qvec").cast("array<double>").alias("_q")
     ).withColumn("_qn", _norm(F.col("_q")))
     crossed = emb.crossJoin(F.broadcast(qry))
     scored = crossed.withColumn(

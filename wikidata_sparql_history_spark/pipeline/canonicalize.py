@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .linking import link_terms
+
 MAX_ITERS = 50
 
 # alias tables at or below this row count resolve driver-side (one
@@ -221,18 +223,7 @@ def canonicalize_triples(
     `canonical_map` (the scale path) regardless of alias-table size —
     used by the ★kg_linked_distributed contract query so the loop
     itself is oracle-exercised, not just the driver fast path."""
-    cmap = F.broadcast(canonical_map(alias_edges, driver_threshold=driver_threshold))
-    out = (
-        triples.join(cmap.withColumnRenamed("src", "subj"), "subj", "left")
-        .withColumn("subj_c", F.coalesce("canon", "subj"))
-        .drop("canon")
-        .join(cmap.withColumnRenamed("src", "obj"), "obj", "left")
-        .withColumn("obj_c", F.coalesce("canon", "obj"))
-        .drop("canon")
-    )
-    return out.select(
-        "conv_id", "turn_idx",
-        F.col("subj_c").alias("subj"),
-        "pred",
-        F.col("obj_c").alias("obj"),
+    cmap = canonical_map(alias_edges, driver_threshold=driver_threshold)
+    return link_terms(triples, cmap, ("subj", "obj")).select(
+        "conv_id", "turn_idx", "subj", "pred", "obj"
     )

@@ -12,7 +12,8 @@ multiple ranges — the reference's golden case ``[2,9), [11,MAX)``
 Two implementations with identical output:
 
 - `coalesce_ranges` — pure built-in plan: classic gaps-and-islands via
-  window functions. Scales: one shuffle on (conv_id) for the window,
+  window functions (`islands`, shared with the fused plan in
+  construct.py). Scales: one shuffle on (conv_id) for the window,
   one partial+final aggregation; no Python.
 - `coalesce_ranges_pandas` — `groupBy(conv_id).applyInPandas` running
   the reference's loop verbatim per conversation (bit-for-bit
@@ -35,30 +36,37 @@ from .. import LONG_MAX
 RANGE_COLS = ["conv_id", "subj", "pred", "obj", "range_start", "range_end"]
 
 
-def coalesce_ranges(facts: DataFrame, turns: DataFrame) -> DataFrame:
-    """Gaps-and-islands with window functions (built-in, codegen'd).
+def islands(present: DataFrame) -> DataFrame:
+    """Per-turn presence (conv_id, subj, pred, obj, turn_idx, pos,
+    next_turn_idx, ts) → one row per coalesced range (conv_id, subj,
+    pred, obj, range_start, range_end, start_ts), where start_ts is the
+    provenance timestamp of the turn that introduced the range.
 
-    Output: one row per coalesced range
-    (conv_id, subj, pred, obj, range_start, range_end, start_ts)
-    where start_ts is the provenance timestamp of the turn that
-    introduced the range.
-    """
-    t = turns.select("conv_id", "turn_idx", "pos", "next_turn_idx", "ts")
-    present = facts.select(
-        "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"),
-        "subj", "pred", "obj",
-    ).join(t, ["conv_id", "turn_idx"])
-
+    Every key starts with conv_id, so an input hash-partitioned on
+    conv_id needs no exchange here (subset rule)."""
     key = ["conv_id", "subj", "pred", "obj"]
     w = Window.partitionBy(*key).orderBy("pos")
     # island id: dense positions minus their rank are constant per run
     grp = (F.col("pos") - F.row_number().over(w)).alias("grp")
-    islands = present.select(*key, "turn_idx", "pos", "next_turn_idx", "ts", grp)
-    return islands.groupBy(*key, "grp").agg(
+    runs = present.select(*key, "turn_idx", "pos", "next_turn_idx", "ts", grp)
+    return runs.groupBy(*key, "grp").agg(
         F.min("turn_idx").alias("range_start"),
         F.max("next_turn_idx").alias("range_end"),
         F.min_by("ts", "pos").alias("start_ts"),
     ).drop("grp")
+
+
+def _present(facts: DataFrame, turns: DataFrame) -> DataFrame:
+    t = turns.select("conv_id", "turn_idx", "pos", "next_turn_idx", "ts")
+    return facts.select(
+        "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"),
+        "subj", "pred", "obj",
+    ).join(t, ["conv_id", "turn_idx"])
+
+
+def coalesce_ranges(facts: DataFrame, turns: DataFrame) -> DataFrame:
+    """Gaps-and-islands with window functions (built-in, codegen'd)."""
+    return islands(_present(facts, turns))
 
 
 def coalesce_ranges_pandas(facts: DataFrame, turns: DataFrame) -> DataFrame:
@@ -70,12 +78,7 @@ def coalesce_ranges_pandas(facts: DataFrame, turns: DataFrame) -> DataFrame:
     a range whose end is the (non-existent) revision after the last
     turn becomes LONG_MAX.
     """
-    t = turns.select("conv_id", "turn_idx", "pos", "next_turn_idx", "ts")
-    present = facts.select(
-        "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"),
-        "subj", "pred", "obj",
-    ).join(t, ["conv_id", "turn_idx"])
-
+    present = _present(facts, turns)
     schema = (
         "conv_id string, subj string, pred string, obj string, "
         "range_start long, range_end long, start_ts timestamp"

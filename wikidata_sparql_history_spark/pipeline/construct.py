@@ -1,75 +1,46 @@
-"""Fused construction pipeline — the minimal-shuffle scale path.
+"""Fused construction plan — the store build's `ranges` and the
+minimal-shuffle scale path.
 
-The composable stages (ordering → extract → link → canonicalize →
-coalesce) are each correct in isolation, but chaining them naively
-shuffles the full fact stream five times (dedup exchange, turns join
-exchange, island-window exchange, final-agg exchange, plus the input
-bucketing). This module fuses them into a plan with exactly TWO wide
-exchanges of the data:
+`construct_ranges` composes the stage modules into one plan, as the
+reference builds a page's revision ranges in one pass
+(RevisionFileConverter.java:128-164): ordering.turn_window →
+extract.extract_facts → linking.link_terms (resolve_dict, then
+canonical_map) → per-turn dedup → coalesce.islands. Chaining the
+stages as separate tables shuffles the full fact stream at each
+boundary; composed, the plan has at most TWO wide exchanges:
 
-  1. `repartition(n, conv_id)` on the transcripts — serves the
-     ordering window (pos / next_turn_idx, W1/W2);
-  2. `repartition(n, conv_id)` on the extractor output — mapInPandas
-     re-keys its output attributes so Catalyst forgets the physical
-     co-location; one exchange re-establishes it.
+  1. hash(conv_id) on the transcripts — serves the turn window;
+  2. `repartition(n, conv_id)` on the pandas extractor's output —
+     mapInPandas re-keys its output attributes so Catalyst forgets the
+     co-location. The builtin extractor keeps them: ONE exchange, in
+     whole-stage codegen end-to-end.
 
-Everything after exchange 2 is shuffle-free by Spark's subset rule:
-`HashPartitioning(conv_id)` satisfies `ClusteredDistribution(conv_id,
-…)`, so the per-turn dedup aggregation, the gaps-and-islands window
-(partitionBy conv_id, subj, pred, obj) and the final range aggregation
-all reuse the same partitioning. Entity linking and canonicalization
-are broadcast joins — they preserve the streamed side's partitioning.
+Everything after the last exchange is shuffle-free by Spark's subset
+rule: `HashPartitioning(conv_id)` satisfies `ClusteredDistribution(
+conv_id, …)` for the dedup aggregation, the island window and the
+range aggregation. Linking and canonicalization are broadcast joins,
+which keep the streamed side's partitioning. The turns join is gone:
+the turn-window columns (pos, next_turn_idx, ts) ride along with each
+fact as extractor metadata.
 
-The trick that removes the turns join: the extractor passes the turn
-metadata columns (pos, next_turn_idx, ts) through the Arrow batch, so
-facts arrive already annotated with their revision context.
-
-Output is identical to the composable path (asserted in
-tests/test_construct_fused.py) and to the DuckDB oracle.
+Output is identical to the composable path (extract_triples →
+link_mentions → canonicalize_triples → coalesce_ranges over
+ordered_turns; tests/test_construct_fused.py) and to the DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import MENTION_RE, PRED_RE
 from . import canonicalize as canon_mod
-from . import linking
+from . import coalesce, extract, linking, ordering
 
 # ts crosses the Arrow boundary as epoch microseconds: pandas
 # timestamp[ns] caps at year 2262, while Spark/our corpus allow wider
 # ranges (the reference hits the same issue with year>9999 RDF dates —
 # SURVEY.md §1.2 tag 7)
-FUSED_EXTRACT_SCHEMA = (
-    "conv_id string, turn_idx long, pos long, next_turn_idx long, "
-    "ts_us long, subj string, pred string, obj string"
-)
-
 _META = ["conv_id", "turn_idx", "pos", "next_turn_idx", "ts_us"]
-
-
-def _extract_with_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.reset_index(drop=True)
-        ments = pdf["text"].str.findall(MENTION_RE)
-        preds = pdf["text"].str.findall(PRED_RE)
-        pe = preds.explode().dropna().rename("pred").to_frame()
-        pe["i"] = pe.groupby(level=0).cumcount()
-        oe = ments.str[1:].explode().dropna().rename("obj").to_frame()
-        oe["i"] = oe.groupby(level=0).cumcount()
-        pairs = pe.reset_index().merge(oe.reset_index(), on=["index", "i"])
-        if pairs.empty:
-            continue
-        meta = pdf[_META].assign(subj=ments.str[0])
-        out = pairs.merge(meta, left_on="index", right_index=True)
-        out = out[out["subj"].notna()]
-        yield out[_META + ["subj", "pred", "obj"]].drop_duplicates()
 
 
 def construct_ranges(
@@ -80,114 +51,45 @@ def construct_ranges(
     n_buckets: int | None = None,
     use_builtin_extractor: bool = False,
 ) -> DataFrame:
-    """transcripts → coalesced validity ranges, two-exchange plan.
-
-    Returns (conv_id, subj, pred, obj, range_start, range_end,
-    start_ts) — same contract as coalesce.coalesce_ranges over the
-    composable stages.
+    """transcripts → coalesced validity ranges (conv_id, subj, pred,
+    obj, range_start, range_end, start_ts) — the contract of
+    coalesce.coalesce_ranges over the composable stages.
 
     `use_builtin_extractor=True` swaps the Arrow/pandas extractor for
-    the pure-columnar regexp_extract_all+posexplode twin. Generate/
-    Project preserve the child's hash partitioning (conv_id survives
-    with the same attribute), so the whole pipeline collapses to ONE
-    exchange and stays in whole-stage codegen end-to-end — the 100 TB
-    fast path. Output identical (tests/test_construct_fused.py).
+    the pure-columnar regexp_extract_all+posexplode variant (one
+    exchange instead of two). Output identical
+    (tests/test_construct_fused.py).
     """
-    from .. import LONG_MAX
-
     n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # exchange 1: conv_id clustering for the ordering window. An
-    # explicit repartition is only issued when the caller pinned a
-    # bucket count; otherwise the window's ClusteredDistribution makes
+    # exchange 1: conv_id clustering for the turn window. An explicit
+    # repartition is only issued when the caller pinned a bucket count;
+    # otherwise the window's ClusteredDistribution makes
     # EnsureRequirements insert the identical hash(conv_id) exchange at
     # spark.sql.shuffle.partitions — and SKIP it when the input is
-    # already hash-partitioned by conv_id (transcripts_from_events is,
-    # since r7), so the wide `text` column never crosses a shuffle
-    # (guide §2.4: remove shuffles outright).
+    # already hash-partitioned by conv_id (transcripts_from_events and
+    # run_pipeline's input are), so the wide `text` column never
+    # crosses a shuffle (guide §2.4: remove shuffles outright).
     t = transcripts.repartition(n_buckets, "conv_id") if n_buckets else transcripts
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts")
-    ordered = t.select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        F.row_number().over(w).cast("long").alias("pos"),
-        F.lead(F.col("turn_idx").cast("long"), 1, LONG_MAX).over(w).alias(
-            "next_turn_idx"
-        ),
+    ordered = ordering.turn_window(
+        t,
         # cast: parquet timestamps may arrive as TIMESTAMP_NTZ, which
         # unix_micros rejects; session tz is UTC so the cast is exact
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         "text",
-    )
+    ).select(*_META, "text")
 
-    if use_builtin_extractor:
-        # columnar twin: regexp_extract_all + posexplode; meta columns
-        # ride along and conv_id keeps its attribute → partitioning
-        # survives, no second exchange needed.
-        # r7: NO size()-prefilter — predicate pushdown inlined BOTH
-        # regexp_extract_all calls into a Filter below this projection,
-        # evaluating each regex 2-3x per turn (confirmed in
-        # plans/r07/kg_ranges_fast_before.txt op (115)). Empty `preds`
-        # explode to zero rows and short `ments` yield NULL objs, so
-        # the single obj-NOT-NULL filter above the Generate (which
-        # pushdown cannot cross: `i` is generated) keeps the row set
-        # identical with ONE evaluation per regex (guide §1.2 per-task
-        # work, §4.4 analog for built-ins).
-        # The single-element struct explode materializes both arrays as
-        # ONE generated attribute, so the filter InferFiltersFromGenerate
-        # derives for the posexplode is a cheap field access instead of
-        # a third regex evaluation.
-        ext = ordered.select(
-            *_META,
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.regexp_extract_all(
-                            "text", F.lit(MENTION_RE), 1
-                        ).alias("ments"),
-                        F.regexp_extract_all(
-                            "text", F.lit(PRED_RE), 1
-                        ).alias("preds"),
-                    )
-                )
-            ).alias("mp"),
-        )
-        facts = ext.select(
-            *_META,
-            F.posexplode("mp.preds").alias("i", "pred"),
-            F.col("mp.ments").alias("ments"),
-        ).select(
-            *_META,
-            # try_: NULL (not ANSI error) on empty/short mention lists
-            F.try_element_at("ments", F.lit(1)).alias("subj"),
-            "pred",
-            F.try_element_at("ments", F.col("i") + 2).alias("obj"),
-        ).filter(F.col("obj").isNotNull())
-    else:
-        facts = ordered.mapInPandas(_extract_with_meta, schema=FUSED_EXTRACT_SCHEMA)
+    facts = extract.extract_facts(ordered, _META, builtin=use_builtin_extractor)
+    if not use_builtin_extractor:
         # exchange 2: re-establish conv_id co-location after the UDF
         facts = facts.repartition(n, "conv_id")
 
     if candidates is not None:
-        d = F.broadcast(linking.resolve_dict(candidates).select("mention", "entity_id"))
-        facts = (
-            facts.join(d.withColumnRenamed("mention", "subj"), "subj", "left")
-            .withColumn("subj", F.coalesce("entity_id", "subj"))
-            .drop("entity_id")
-            .join(d.withColumnRenamed("mention", "obj"), "obj", "left")
-            .withColumn("obj", F.coalesce("entity_id", "obj"))
-            .drop("entity_id")
-        )
+        best = linking.resolve_dict(candidates).select("mention", "entity_id")
+        facts = linking.link_terms(facts, best, ("subj", "obj"))
     if aliases is not None:
-        cmap = F.broadcast(canon_mod.canonical_map(aliases))
-        facts = (
-            facts.join(cmap.withColumnRenamed("src", "subj"), "subj", "left")
-            .withColumn("subj", F.coalesce("canon", "subj"))
-            .drop("canon")
-            .join(cmap.withColumnRenamed("src", "obj"), "obj", "left")
-            .withColumn("obj", F.coalesce("canon", "obj"))
-            .drop("canon")
-        )
+        cmap = canon_mod.canonical_map(aliases)
+        facts = linking.link_terms(facts, cmap, ("subj", "obj"))
 
     # per-turn dedup (linking/canonicalization can merge two mentions
     # into one entity): aggregation on conv_id-prefixed keys — no
@@ -195,14 +97,4 @@ def construct_ranges(
     facts = facts.groupBy(
         "conv_id", "subj", "pred", "obj", "turn_idx", "pos", "next_turn_idx"
     ).agg(F.timestamp_micros(F.min("ts_us")).alias("ts"))
-
-    # gaps-and-islands, same partitioning
-    key = ["conv_id", "subj", "pred", "obj"]
-    wk = Window.partitionBy(*key).orderBy("pos")
-    grp = (F.col("pos") - F.row_number().over(wk)).alias("grp")
-    islands = facts.select(*key, "turn_idx", "pos", "next_turn_idx", "ts", grp)
-    return islands.groupBy(*key, "grp").agg(
-        F.min("turn_idx").alias("range_start"),
-        F.max("next_turn_idx").alias("range_end"),
-        F.min_by("ts", "pos").alias("start_ts"),
-    ).drop("grp")
+    return coalesce.islands(facts)

@@ -9,15 +9,21 @@ under the FIXTURES.md mention grammar:
     ``<<P>>`` pairs with the (i+1)-th ``[[E]]`` mention; the first
     mention is the subject.
 
-Two implementations with identical output:
+One core, `extract_facts`, with two variants of identical output; the
+columns named in `meta` ride along with every fact:
 
-- `extract_triples` — **pandas UDF over Arrow batches** via
-  `mapInPandas` (the north rule's mandated shape; no per-row Python at
-  the Spark level — batches arrive as Arrow, regex runs through
-  pandas' vectorized str accessor).
-- `extract_triples_builtin` — pure JVM columnar plan
-  (`regexp_extract_all` + `posexplode`), fully inside whole-stage
-  codegen; the fast path we benchmark against.
+- pandas/Arrow — `mapInPandas` over Arrow batches (the north rule's
+  mandated shape; no per-row Python at the Spark level — batches
+  arrive as Arrow, regex runs through pandas' vectorized str
+  accessor).
+- builtin — pure JVM columnar plan (`regexp_extract_all` +
+  `posexplode`), fully inside whole-stage codegen; the fast path we
+  benchmark against.
+
+`extract_triples` / `extract_triples_builtin` are the per-turn fact
+tables over them (meta = conv_id, turn_idx); the fused
+`construct.construct_ranges` plan carries its turn-window columns as
+meta instead, so facts arrive annotated with their revision context.
 
 Per-turn duplicate triples are dropped (A3 analog of the reference's
 HashSet dedup, RevisionFileConverter.java:199-210).
@@ -30,37 +36,21 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 MENTION_RE = r"\[\[(E\d+)\]\]"
 PRED_RE = r"<<(P\d+)>>"
 
-EXTRACT_SCHEMA = "conv_id string, turn_idx long, subj string, pred string, obj string"
+TRIPLE = ["subj", "pred", "obj"]
+TURN_META = ["conv_id", "turn_idx"]
 
 
-_EMPTY = pd.DataFrame(
-    {
-        "conv_id": pd.Series(dtype="object"),
-        "turn_idx": pd.Series(dtype="int64"),
-        "subj": pd.Series(dtype="object"),
-        "pred": pd.Series(dtype="object"),
-        "obj": pd.Series(dtype="object"),
-    }
-)
-
-
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    if len(pdf) == 0:
-        return _EMPTY.copy()
+def _facts_batch(pdf: pd.DataFrame, meta: list[str]) -> pd.DataFrame | None:
+    if pdf.empty:
+        return None
     pdf = pdf.reset_index(drop=True)
     ments = pdf["text"].str.findall(MENTION_RE)
     preds = pdf["text"].str.findall(PRED_RE)
-    meta = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"].astype("int64"),
-            "subj": ments.str[0],
-        }
-    )
     # positional pairing: i-th pred joins i-th non-subject mention,
     # via exploded frames index-aligned on (row, position) — no row loop
     pe = preds.explode().dropna().rename("pred").to_frame()
@@ -69,39 +59,45 @@ def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     oe["i"] = oe.groupby(level=0).cumcount()
     pairs = pe.reset_index().merge(oe.reset_index(), on=["index", "i"])
     if pairs.empty:
-        return _EMPTY.copy()
-    out = pairs.merge(meta, left_on="index", right_index=True)
+        return None
+    out = pairs.merge(
+        pdf[meta].assign(subj=ments.str[0]), left_on="index", right_index=True
+    )
     out = out[out["subj"].notna()]
-    return out[["conv_id", "turn_idx", "subj", "pred", "obj"]].drop_duplicates()
+    return out[meta + TRIPLE].drop_duplicates()
 
 
-def extract_triples(transcripts: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, subj, pred, obj) via Arrow-batched pandas UDF."""
-
+def _facts_pandas(df: DataFrame, meta: list[str]) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _extract_batch(pdf)
+            out = _facts_batch(pdf, meta)
+            if out is not None:
+                yield out
 
-    cols = transcripts.select("conv_id", F.col("turn_idx").cast("long"), "text")
-    return cols.mapInPandas(run, schema=EXTRACT_SCHEMA).dropDuplicates(
-        ["conv_id", "turn_idx", "subj", "pred", "obj"]
+    schema = StructType(
+        [StructField(c, df.schema[c].dataType) for c in meta]
+        + [StructField(c, StringType()) for c in TRIPLE]
     )
+    return df.select(*meta, "text").mapInPandas(run, schema=schema)
 
 
-def extract_triples_builtin(transcripts: DataFrame) -> DataFrame:
-    """Same semantics, pure built-in expressions (whole-stage codegen)."""
-    # r7: no size()-prefilter — it was pushed below the projection,
-    # re-evaluating both regexp_extract_all calls in the Filter (2-3x
-    # per turn). Empty pred lists explode to zero rows and short
-    # mention lists yield NULL subj/obj, so the obj-NOT-NULL filter
-    # above the Generate keeps the row set identical with one
-    # evaluation per regex (same rewrite as construct.py; guide §1.2).
-    df = transcripts.select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        # single-element struct explode: both arrays become ONE
-        # generated attribute, so InferFiltersFromGenerate's derived
-        # filter for the posexplode is a field access, not a regex
+def _facts_builtin(df: DataFrame, meta: list[str]) -> DataFrame:
+    # r7: NO size()-prefilter — predicate pushdown inlined BOTH
+    # regexp_extract_all calls into a Filter below this projection,
+    # evaluating each regex 2-3x per turn (confirmed in
+    # plans/r07/kg_ranges_fast_before.txt op (115)). Empty `preds`
+    # explode to zero rows and short `ments` yield NULL objs, so the
+    # single obj-NOT-NULL filter above the Generate (which pushdown
+    # cannot cross: `i` is generated) keeps the row set identical with
+    # ONE evaluation per regex (guide §1.2 per-task work, §4.4 analog
+    # for built-ins).
+    # The single-element struct explode materializes both arrays as ONE
+    # generated attribute, so the filter InferFiltersFromGenerate
+    # derives for the posexplode is a cheap field access instead of a
+    # third regex evaluation. Generate/Project keep the meta attributes,
+    # so a hash partitioning on them survives (no exchange needed).
+    ext = df.select(
+        *meta,
         F.explode(
             F.array(
                 F.struct(
@@ -115,21 +111,40 @@ def extract_triples_builtin(transcripts: DataFrame) -> DataFrame:
             )
         ).alias("mp"),
     )
-    df = df.select(
-        "conv_id",
-        "turn_idx",
+    return ext.select(
+        *meta,
         F.posexplode("mp.preds").alias("i", "pred"),
         F.col("mp.ments").alias("ments"),
     ).select(
-        "conv_id",
-        "turn_idx",
+        *meta,
         # try_element_at: NULL (→ filtered) on empty/short mention
         # lists — plain element_at throws under Spark 4 ANSI mode,
-        # diverging from the pandas twin
+        # diverging from the pandas variant
         F.try_element_at("ments", F.lit(1)).alias("subj"),
         "pred",
         F.try_element_at("ments", F.col("i") + 2).alias("obj"),
+    ).filter(F.col("obj").isNotNull())
+
+
+def extract_facts(df: DataFrame, meta: list[str], builtin: bool = False) -> DataFrame:
+    """`df` (meta columns + text) → (*meta, subj, pred, obj) rows,
+    distinct within an Arrow batch (pandas) or not at all (builtin);
+    callers deduplicate on their own keys."""
+    return (_facts_builtin if builtin else _facts_pandas)(df, meta)
+
+
+def _turn_facts(transcripts: DataFrame, builtin: bool) -> DataFrame:
+    cols = transcripts.select(
+        "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"), "text"
     )
-    return df.filter(F.col("obj").isNotNull()).dropDuplicates(
-        ["conv_id", "turn_idx", "subj", "pred", "obj"]
-    )
+    return extract_facts(cols, TURN_META, builtin).dropDuplicates(TURN_META + TRIPLE)
+
+
+def extract_triples(transcripts: DataFrame) -> DataFrame:
+    """(conv_id, turn_idx, subj, pred, obj) via Arrow-batched pandas UDF."""
+    return _turn_facts(transcripts, builtin=False)
+
+
+def extract_triples_builtin(transcripts: DataFrame) -> DataFrame:
+    """Same semantics, pure built-in expressions (whole-stage codegen)."""
+    return _turn_facts(transcripts, builtin=True)

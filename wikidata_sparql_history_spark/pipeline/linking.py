@@ -41,30 +41,30 @@ def resolve_dict(candidates: DataFrame) -> DataFrame:
     )
 
 
-def link_mentions(
-    triples: DataFrame, candidates: DataFrame, broadcast: bool = True
-) -> DataFrame:
-    """Rewrite subj/obj surface forms through the candidate dict.
-
-    Unmatched mentions pass through unchanged (left join) — they stay
-    as literals, mirroring the reference keeping unparseable values.
-    """
-    d = resolve_dict(candidates).select("mention", "entity_id")
-    if broadcast:
-        d = F.broadcast(d)
-    out = (
-        triples.join(d.withColumnRenamed("mention", "subj"), "subj", "left")
-        .withColumn("subj_id", F.coalesce("entity_id", "subj"))
-        .drop("entity_id")
-        .join(d.withColumnRenamed("mention", "obj"), "obj", "left")
-        .withColumn("obj_id", F.coalesce("entity_id", "obj"))
-        .drop("entity_id")
+def link_terms(df: DataFrame, mapping: DataFrame, cols) -> DataFrame:
+    """Rewrite each of `cols` through the two-column `mapping`
+    (term, replacement): one broadcast left join per column, so the
+    streamed side keeps its partitioning. Unmatched values pass through
+    unchanged — they stay as literals, mirroring the reference keeping
+    unparseable values. Each rewritten column moves to the front."""
+    term, repl = mapping.columns
+    m = F.broadcast(
+        mapping.select(F.col(term).alias("_term"), F.col(repl).alias("_repl"))
     )
-    return out.select(
-        "conv_id", "turn_idx",
-        F.col("subj_id").alias("subj"),
-        "pred",
-        F.col("obj_id").alias("obj"),
+    for c in cols:
+        df = (
+            df.join(m.withColumnRenamed("_term", c), c, "left")
+            .withColumn(c, F.coalesce("_repl", c))
+            .drop("_repl")
+        )
+    return df
+
+
+def link_mentions(triples: DataFrame, candidates: DataFrame) -> DataFrame:
+    """Rewrite subj/obj surface forms through the candidate dict."""
+    d = resolve_dict(candidates).select("mention", "entity_id")
+    return link_terms(triples, d, ("subj", "obj")).select(
+        "conv_id", "turn_idx", "subj", "pred", "obj"
     )
 
 

@@ -1,21 +1,22 @@
-"""End-to-end KG construction job: transcripts → turns + triples +
-adjacency, checkpoint-resumable per stage (SURVEY.md §3.1 Spark shape,
-§2.1 S8).
+"""End-to-end KG construction job: transcripts → turns + ranges + the
+tables derived from them, checkpoint-resumable per stage (SURVEY.md
+§3.1 Spark shape, §2.1 S8).
 
 Stages (each an idempotent table write; resume skips completed ones):
 
   1. turns      — ordered turn metadata (ordering.ordered_turns)
-  2. mentions   — extracted per-turn facts (extract.extract_triples)
-  3. linked     — entity-linked + canonicalized facts
-  4. ranges     — coalesced validity ranges (coalesce.coalesce_ranges)
-  5. triples    — packed array-form triples table
-  6. adjacency  — subj → [(pred, obj)]
-  7. dictionary / triples_encoded — the term dictionary (J6) and the
+  2. ranges     — coalesced validity ranges, by the fused plan
+     (construct.construct_ranges: extract → link → canonicalize →
+     gaps-and-islands in one plan, no intermediate tables)
+  3. triples    — packed array-form triples table
+  4. adjacency  — subj → [(pred, obj)]
+  5. dictionary / triples_encoded — the term dictionary (J6) and the
      int64-encoded fact table written ALONGSIDE the string one: the
      reference's on-disk layout is long-encoded (RocksStore.java:
      403-453), and downstream snapshot scans over the encoded table
      compare longs, never strings (plans/encoding.py)
-  8. statements / statement_qualifiers / statement_references —
+  6. entity_terms — entity term rows (pipeline/terms.py)
+  7. statements / statement_qualifiers / statement_references —
      the reification layer (pipeline/reify.py; only when candidates
      AND aliases are provided, since its terms are linked)
 
@@ -34,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import catalog
-from . import coalesce, extract, linking, canonicalize, ordering
+from . import coalesce, construct, ordering
 
 
 @dataclass
@@ -55,18 +56,11 @@ def run_pipeline(
     candidates: DataFrame | None = None,
     aliases: DataFrame | None = None,
     resume: bool = False,
-    conv_buckets: int | None = None,
     use_builtin_extractor: bool = False,
 ) -> PipelineResult:
-    """Run (or resume) the full construction pipeline.
-
-    `conv_buckets`: explicit repartition on hash(conv_id) before the
-    grouped stages (north rule). Defaults to
-    spark.sql.shuffle.partitions.
-    """
+    """Run (or resume) the full construction pipeline."""
     res = PipelineResult(out_dir=out_dir)
     os.makedirs(out_dir, exist_ok=True)
-    n_buckets = conv_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def stage(name: str, make, sort_by=None):
         path = os.path.join(out_dir, name)
@@ -84,36 +78,25 @@ def run_pipeline(
         }
         return out
 
-    # explicit conv_id hash bucketing: ordering + coalescing both group
-    # by conv_id, so one up-front repartition serves every later stage
+    # explicit conv_id hash bucketing: the turn window, the fused ranges
+    # plan and the statement layer all group by conv_id, so one
+    # up-front repartition serves every stage that reads the input
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     bucketed = transcripts.repartition(n_buckets, "conv_id")
 
-    turns = stage(
+    stage(
         "turns", lambda: ordering.ordered_turns(bucketed), sort_by=["conv_id", "pos"]
     )
 
-    extractor = (
-        extract.extract_triples_builtin if use_builtin_extractor
-        else extract.extract_triples
-    )
-    mentions = stage("mentions", lambda: extractor(bucketed))
-
-    def make_linked():
-        df = mentions
-        if candidates is not None:
-            df = linking.link_mentions(df, candidates)
-        if aliases is not None:
-            df = canonicalize.canonicalize_triples(df, aliases)
-        return df
-
-    linked = stage("linked", make_linked)
-
+    # start_ts keeps the input's ts type (the fused plan rebuilds it
+    # from epoch micros as TIMESTAMP; parquet inputs may be TIMESTAMP_NTZ)
+    ts_type = transcripts.schema["ts"].dataType
     ranges = stage(
         "ranges",
-        lambda: coalesce.coalesce_ranges(
-            linked.dropDuplicates(["conv_id", "turn_idx", "subj", "pred", "obj"]),
-            turns,
-        ),
+        lambda: construct.construct_ranges(
+            spark, bucketed, candidates, aliases,
+            use_builtin_extractor=use_builtin_extractor,
+        ).withColumn("start_ts", F.col("start_ts").cast(ts_type)),
         sort_by=["subj", "pred", "obj"],
     )
 

@@ -20,21 +20,26 @@ from .. import LONG_MAX
 TURN_ORDER = ("turn_idx", "ts")
 
 
+def turn_window(transcripts: DataFrame, *carry) -> DataFrame:
+    """The W1/W2 window, defined once: (conv_id, turn_idx as long,
+    *carry, pos, next_turn_idx, parent_turn_idx). Callers project away
+    what they do not read; Catalyst prunes the unused window functions.
+    """
+    w = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
+    turn = F.col("turn_idx").cast("long")
+    return transcripts.select(
+        "conv_id",
+        turn.alias("turn_idx"),
+        *carry,
+        F.row_number().over(w).alias("pos"),
+        F.lead(turn, 1, LONG_MAX).over(w).alias("next_turn_idx"),
+        F.lag(turn, 1).over(w).alias("parent_turn_idx"),
+    )
+
+
 def ordered_turns(transcripts: DataFrame) -> DataFrame:
     """Turn-metadata table: the analog of revisions.tsv.gz
     (FileHistoryOutput.java:34-44) — one row per turn with dense
     position and next-revision lookahead.
     """
-    w = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
-    return transcripts.select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("turn_idx"),
-        "role",
-        "tool",
-        "ts",
-        F.row_number().over(w).alias("pos"),
-        F.lead(F.col("turn_idx").cast("long"), 1, LONG_MAX).over(w).alias(
-            "next_turn_idx"
-        ),
-        F.lag(F.col("turn_idx").cast("long"), 1).over(w).alias("parent_turn_idx"),
-    )
+    return turn_window(transcripts, "role", "tool", "ts")

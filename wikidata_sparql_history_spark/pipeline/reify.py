@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import canonicalize, linking
+from .extract import MENTION_RE
 
 # one reified segment; inner markers are optional so the base grammar's
 # plain segments (and the P0 self-typing fact) parse too
@@ -104,7 +105,7 @@ def reified_segments(transcripts: DataFrame) -> DataFrame:
         F.explode(
             F.array(
                 F.struct(
-                    F.regexp_extract("text", r"\[\[(E\d+)\]\]", 1).alias("subj"),
+                    F.regexp_extract("text", MENTION_RE, 1).alias("subj"),
                     F.regexp_extract_all("text", F.lit(SEG_RE), 1).alias("segs"),
                 )
             )
@@ -137,20 +138,8 @@ def entity_map(candidates: DataFrame, alias_edges: DataFrame) -> DataFrame:
     the composed link+canon dimension, built once and broadcast."""
     best = linking.resolve_dict(candidates).select("mention", "entity_id")
     cmap = canonicalize.canonical_map(alias_edges)
-    return best.join(
-        cmap.withColumnRenamed("src", "entity_id"), "entity_id", "left"
-    ).select("mention", F.coalesce("canon", "entity_id").alias("entity"))
-
-
-def _link(df: DataFrame, emap: DataFrame, col: str) -> DataFrame:
-    """Rewrite one surface-form column through the broadcast entity map
-    ('' — absent optional part — passes through untouched)."""
-    return (
-        df.join(
-            F.broadcast(emap.withColumnRenamed("mention", col)), col, "left"
-        )
-        .withColumn(col, F.coalesce("entity", F.col(col)))
-        .drop("entity")
+    return linking.link_terms(best, cmap, ("entity_id",)).select(
+        "mention", F.col("entity_id").alias("entity")
     )
 
 
@@ -163,9 +152,10 @@ def reify_statements(
     segment with stmt_id attached; feeds statement_nodes /
     statement_qualifiers / statement_references."""
     segs = reified_segments(transcripts)
-    emap = entity_map(candidates, alias_edges)
-    for col in ("subj", "obj", "qual_obj"):
-        segs = _link(segs, emap, col)
+    # '' (absent optional part) has no mapping and passes through
+    segs = linking.link_terms(
+        segs, entity_map(candidates, alias_edges), ("subj", "obj", "qual_obj")
+    )
     return segs.withColumn(
         "stmt_id",
         F.substring(

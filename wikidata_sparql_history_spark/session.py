@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap for a host with `phys_bytes` of RAM: half of it,
+    capped at 48g. Half leaves room for the python workers and the
+    JVM's off-heap memory; a larger heap than the host can back gets
+    the JVM OOM-killed instead of spilling."""
+    return f"{min(MAX_DRIVER_MEM_MB, phys_bytes // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "kg-construct",
     master: str | None = None,
@@ -28,6 +39,10 @@ def get_spark(
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
         )
+
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -68,9 +83,7 @@ def get_spark(
         # local[N] = one JVM: driver memory IS executor memory. Size it
         # so 11M-row shuffles sort in memory instead of spilling
         # (UnsafeExternalSorter spills were the 8→32 scaling wall).
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        .config("spark.driver.memory", driver_mem)
     )
     # shuffle/spill scratch on tmpfs when available: /tmp here is
     # ext4-on-virtio and its bandwidth flat-lines multi-core shuffles

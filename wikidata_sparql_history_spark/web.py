@@ -92,27 +92,24 @@ def make_app(spark, store: str, max_rows: int = 1000):
     """→ WSGI app evaluating SPARQL over the materialized `store`.
     The store loads lazily on the first request and is shared by all
     subsequent ones (HistoryRepository lifecycle)."""
-    state = {}
     # lazy init guarded by a lock: under a multi-threaded WSGI server
     # concurrent first requests would otherwise race cli._load (two
-    # redundant store loads, and a partially-populated dict visible
-    # mid-write). The dict is populated via ONE atomic assignment
-    # after the load completes (r6 advice item 3).
+    # redundant store loads). The (triples, ranges, turns) tuple is
+    # built fully, then published by ONE assignment to `loaded`, so a
+    # reader sees either nothing or the whole store.
     import threading
 
     _init_lock = threading.Lock()
+    loaded = None
 
     def _tables():
-        if "triples" not in state:
+        nonlocal loaded
+        if loaded is None:
             with _init_lock:
-                if "triples" not in state:
+                if loaded is None:
                     ranges, turns = cli._load(spark, store)
-                    state.update({
-                        "ranges": ranges,
-                        "turns": turns,
-                        "triples": ranges.select("subj", "pred", "obj"),
-                    })
-        return state["triples"], state["ranges"], state["turns"]
+                    loaded = (ranges.select("subj", "pred", "obj"), ranges, turns)
+        return loaded
 
     def app(environ, start_response):
         if environ.get("PATH_INFO", "/") not in ("/sparql", "/"):
