@@ -100,6 +100,18 @@ def test_canonical_map_tolerates_exact_duplicate_edges(spark):
         canonical_map(conflicting)
 
 
+def test_canonical_map_driver_path_rejects_cycles(spark):
+    """The driver path validates from its one bounded collect: a cycle
+    among the alias edges raises instead of looping."""
+    import pytest
+
+    cyclic = spark.createDataFrame(
+        [("Qa", "Qb"), ("Qb", "Qc"), ("Qc", "Qa")], "src string, dst string"
+    )
+    with pytest.raises(ValueError, match="cycle"):
+        canonical_map(cyclic)
+
+
 def test_canonical_map_distributed_loop_matches_driver_path(spark):
     """driver_threshold=0 forces the distributed path-halving loop (the
     100-TB path: plain shuffle join, no mandatory broadcast of the map

@@ -153,6 +153,78 @@ def test_ranges_table_is_construct_ranges(spark, tmp_path):
     assert rows(ranges) == want
 
 
+def _persisted_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_build_releases_persisted_frames(spark, tmp_path, monkeypatch):
+    """The shared input and statement-occurrence caches are released
+    after a build, and also when a stage write fails."""
+    from wikidata_sparql_history_spark.sources import catalog
+
+    t = synth.transcripts(spark, 10)
+    cand, ali = synth.candidate_dict(spark), synth.alias_edges(spark)
+    before = _persisted_rdds(spark)
+    run_pipeline(spark, t, str(tmp_path / "ok"), cand, ali)
+    assert _persisted_rdds(spark) == before
+
+    write = catalog.write_table
+
+    def failing(df, path, *a, **kw):
+        if os.path.basename(path) == "statement_qualifiers":
+            raise RuntimeError("injected write failure")
+        return write(df, path, *a, **kw)
+
+    monkeypatch.setattr(catalog, "write_table", failing)
+    import pytest
+
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        run_pipeline(spark, t, str(tmp_path / "failed"), cand, ali)
+    assert _persisted_rdds(spark) == before
+
+
+def test_statement_tables_equal_unshared_occurrences(spark, tmp_path):
+    """The build's statement tables, computed from one persisted
+    occurrence pass, equal the statement functions over an independent,
+    unpersisted reify_statements of the same input, row for row."""
+    from wikidata_sparql_history_spark.pipeline import reify
+
+    t = synth.transcripts(spark, 30)
+    cand, ali = synth.candidate_dict(spark), synth.alias_edges(spark)
+    res = run_pipeline(spark, t, str(tmp_path / "kg"), cand, ali)
+    occ = reify.reify_statements(t, cand, ali)
+    for table, fn in (
+        ("statements", reify.statement_nodes),
+        ("statement_qualifiers", reify.statement_qualifiers),
+        ("statement_references", reify.statement_references),
+    ):
+        got = res.table(spark, table)
+        want = fn(occ)
+        assert got.columns == want.columns, table
+        got_rows = sorted(tuple(r) for r in got.collect())
+        assert len(got_rows) > 0, table
+        assert got_rows == sorted(tuple(r) for r in want.collect()), table
+
+
+def test_partition_lineage_describes_the_write(spark, tmp_path):
+    """metrics.json lineage has one key per written part file (keyed by
+    its part-NNNNN index) and its values sum to the table's rows."""
+    import glob
+    import json
+
+    out = str(tmp_path / "kg")
+    res = run_pipeline(spark, synth.transcripts(spark, 25), out)
+    with open(os.path.join(out, "metrics.json")) as f:
+        lineage = json.load(f)["partition_lineage"]
+    assert set(lineage) == {"ranges", "turns"}
+    for name, per_part in lineage.items():
+        files = glob.glob(os.path.join(out, name, "part-*.parquet"))
+        assert sorted(per_part, key=int) == sorted(
+            str(int(os.path.basename(f).split("-")[1])) for f in files
+        ), name
+        assert sum(per_part.values()) == res.table(spark, name).count(), name
+
+
 def test_per_turn_text_invariant(spark):
     """Per-row invariant (BASELINE.json input_hint): after shuffling
     and re-ordering, each (conv_id, turn_idx) keeps its exact text."""

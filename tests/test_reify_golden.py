@@ -190,3 +190,61 @@ def test_statements_agree_with_extraction_on_synth_corpus(spark):
     }
     assert stmt_set == base_set
     assert len(stmt_set) > 1000
+
+
+def _fact_path_exchanges(plan: str) -> list[str]:
+    """Exchange lines of a plan tree string outside the broadcast
+    dimension subtrees and outside cached-relation subtrees (whose
+    exchanges ran once, when the cache was filled)."""
+    out, skip_below = [], None
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        col = len(line) - len(body)
+        if skip_below is not None and col > skip_below:
+            continue
+        skip_below = None
+        if body.startswith(("BroadcastExchange", "InMemoryRelation")):
+            skip_below = col
+        elif body.startswith("Exchange"):
+            out.append(body)
+    return out
+
+
+def test_statement_family_adds_no_exchange_on_clustered_input(spark):
+    """Over a conv_id-clustered input every statement table keys its
+    window / distinct on conv_id-prefixed columns, so the subset rule
+    lets them reuse the input's hash(conv_id) partitioning: the only
+    fact-path exchange is the input's own repartition, and over the
+    persisted occurrences (the store build's shape) there is none."""
+    rows = [(c, 1, "user", text, "", TS) for c, text in TEXTS.items()]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    ).repartition(3, "conv_id")
+    r = reify.reify_statements(
+        df, synth.candidate_dict(spark), synth.alias_edges(spark)
+    )
+    family = (
+        reify.statement_nodes,
+        reify.statement_qualifiers,
+        reify.statement_references,
+        reify.statement_value_nodes,
+    )
+    for fn in family:
+        plan = fn(r)._jdf.queryExecution().executedPlan().toString()
+        ex = _fact_path_exchanges(plan)
+        assert len(ex) == 1, (fn.__name__, ex, plan[:4000])
+        assert ex[0].startswith("Exchange hashpartitioning(conv_id#"), ex
+        assert "REPARTITION_BY_NUM" in ex[0], ex
+    cached = r.persist()
+    try:
+        # fill the cache before planning, as run_pipeline does: only a
+        # filled cache reports its hashpartitioning(conv_id)
+        cached.count()
+        for fn in family:
+            plan = fn(cached)._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan, plan[:4000]
+            assert _fact_path_exchanges(plan) == [], (fn.__name__, plan[:4000])
+    finally:
+        cached.unpersist()

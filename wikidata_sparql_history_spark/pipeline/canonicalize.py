@@ -26,16 +26,16 @@ from .linking import link_terms
 MAX_ITERS = 50
 
 # alias tables at or below this row count resolve driver-side (one
-# collect, pure-python pointer chase, one createDataFrame) instead of
-# paying several serial Spark jobs; above it, the distributed
-# path-halving loop runs. The loop is the general/scale path — the
-# fast path only applies when the whole alias dimension would have
-# been broadcast anyway.
+# bounded collect, pure-python validation and pointer chase, one
+# createDataFrame) instead of paying several serial Spark jobs; above
+# it, the distributed path-halving loop runs. The loop is the
+# general/scale path — the fast path only applies when the whole alias
+# dimension would have been broadcast anyway.
 DRIVER_THRESHOLD = 100_000
 
 
-def _canonical_map_driver(alias_edges: DataFrame) -> DataFrame:
-    rows = alias_edges.select("src", "dst").collect()
+def _canonical_map_driver(spark, rows) -> DataFrame:
+    """Validate and resolve already-collected distinct (src, dst) rows."""
     parent: dict[str, str] = {}
     for r in rows:
         if r["src"] in parent and parent[r["src"]] != r["dst"]:
@@ -57,9 +57,7 @@ def _canonical_map_driver(alias_edges: DataFrame) -> DataFrame:
             cur = parent[cur]
             hops += 1
         out.append((src, cur))
-    return alias_edges.sparkSession.createDataFrame(
-        out, "src string, canon string"
-    )
+    return spark.createDataFrame(out, "src string, canon string")
 
 
 # resolved maps cached per (session-token, analyzed-plan semanticHash):
@@ -124,6 +122,15 @@ def canonical_map(
     # src with two DIFFERENT dsts violates the forest precondition, so
     # the gate compares distinct edges against distinct srcs
     edges = alias_edges.select("src", "dst").dropDuplicates()
+    if driver_threshold:
+        # one bounded collect decides the path: at most threshold+1
+        # rows reach the driver, and a small table is resolved from them
+        rows = edges.limit(driver_threshold + 1).collect()
+        if len(rows) <= driver_threshold:
+            result = _canonical_map_driver(alias_edges.sparkSession, rows)
+            if key is not None:
+                _MAP_CACHE[key] = result
+            return result
     n, n_src = edges.agg(F.count("*"), F.countDistinct("src")).first()
     if n != n_src:
         raise ValueError(
@@ -131,11 +138,6 @@ def canonical_map(
             "distinct srcs); route through connected_components() for "
             "general graphs"
         )
-    if driver_threshold and n <= driver_threshold:
-        result = _canonical_map_driver(edges)
-        if key is not None:
-            _MAP_CACHE[key] = result
-        return result
     m = edges
     converged = False
     for _ in range(max_iters):

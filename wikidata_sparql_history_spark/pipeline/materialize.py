@@ -20,17 +20,46 @@ Stages (each an idempotent table write; resume skips completed ones):
      the reification layer (pipeline/reify.py; only when candidates
      AND aliases are provided, since its terms are linked)
 
-Per-partition lineage + metrics land in metrics.json next to the
-tables (north rule: "per-partition lineage and metrics sinks").
+Each piece of work runs once per build:
+
+- the input is shuffled ONCE, `repartition(shuffle.partitions,
+  conv_id)`, and persisted (MEMORY_AND_DISK). `turns`, `ranges` and the
+  statement occurrences read the cached scan, which keeps
+  hashpartitioning(conv_id), so their conv_id windows and aggregates
+  add no exchange over the input;
+- the statement occurrences (`reify.reify_statements`: segment parse,
+  entity-map linking, stmt_id hashing) are persisted once
+  (MEMORY_AND_DISK) and feed all three statement tables, which add no
+  shuffle of their own on that clustering.
+
+Each persisted frame is filled (one count job) by the first stage that
+needs it, before that stage's plan is built: Spark reports a cached
+scan's hashpartitioning only once the cache is filled. A resumed build
+whose consumers all skip computes neither. Both are released in a
+`finally` after the last stage is written, or when a stage fails, as
+is the dictionary's localCheckpoint pin (`encoding.release`).
+
+Only the tables a later stage consumes are read back from disk:
+`ranges` (triples, adjacency, dictionary, triples_encoded,
+entity_terms) and `dictionary` (triples_encoded).
+
+Per-stage seconds and per-partition lineage land in metrics.json next
+to the tables (north rule: "per-partition lineage and metrics sinks").
+`partition_lineage` maps each of `ranges` / `turns` to {write-task
+partition index: rows}, read from the written part files' parquet
+footers: it describes the write itself, and costs no Spark job.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,123 +91,158 @@ def run_pipeline(
     res = PipelineResult(out_dir=out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
-    def stage(name: str, make, sort_by=None):
+    def stage(name: str, make, sort_by=None, read_back=False):
         path = os.path.join(out_dir, name)
         t0 = time.monotonic()
         if resume and catalog.table_exists(path):
             res.stages_skipped.append(name)
         else:
-            df = make()
-            catalog.write_table(df, path, sort_by=sort_by)
+            catalog.write_table(make(), path, sort_by=sort_by)
             res.stages_run.append(name)
-        out = catalog.read_table(spark, path)
+        out = catalog.read_table(spark, path) if read_back else None
         res.metrics[name] = {
             "seconds": round(time.monotonic() - t0, 3),
             "skipped": name in res.stages_skipped,
         }
         return out
 
-    # explicit conv_id hash bucketing: the turn window, the fused ranges
-    # plan and the statement layer all group by conv_id, so one
-    # up-front repartition serves every stage that reads the input
+    releases = []  # run in the finally below
+
+    def shared(make):
+        """`make()` persisted and filled on first use, so stages that
+        skip on resume never compute it. Filling before any consumer's
+        plan is built matters: Spark reports a cached scan's output
+        partitioning only once the cache is filled, and a consumer
+        planned earlier re-shuffles the cached rows."""
+
+        @functools.cache
+        def get() -> DataFrame:
+            df = make().persist(StorageLevel.MEMORY_AND_DISK)
+            releases.append(df.unpersist)
+            df.count()
+            return df
+
+        return get
+
+    # ONE conv_id shuffle of the input: the turn window, the fused
+    # ranges plan and the statement occurrences all group by conv_id,
+    # and the cached scan keeps hashpartitioning(conv_id), so none of
+    # them shuffles the input again
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bucketed = transcripts.repartition(n_buckets, "conv_id")
-
-    stage(
-        "turns", lambda: ordering.ordered_turns(bucketed), sort_by=["conv_id", "pos"]
-    )
-
-    # start_ts keeps the input's ts type (the fused plan rebuilds it
-    # from epoch micros as TIMESTAMP; parquet inputs may be TIMESTAMP_NTZ)
-    ts_type = transcripts.schema["ts"].dataType
-    ranges = stage(
-        "ranges",
-        lambda: construct.construct_ranges(
-            spark, bucketed, candidates, aliases,
-            use_builtin_extractor=use_builtin_extractor,
-        ).withColumn("start_ts", F.col("start_ts").cast(ts_type)),
-        sort_by=["subj", "pred", "obj"],
-    )
-
-    stage("triples", lambda: coalesce.to_range_arrays(ranges),
-          sort_by=["subj", "pred", "obj"])
-
-    from ..plans import views
-
-    stage("adjacency", lambda: views.adjacency(ranges), sort_by=["subj"])
-
-    from ..plans import encoding
-
-    dictionary = stage(
-        "dictionary", lambda: encoding.build_dictionary(ranges), sort_by=["id"]
-    )
-    stage(
-        "triples_encoded",
-        lambda: encoding.encode_triples(
-            ranges.select(
-                "conv_id", "subj", "pred", "obj", "range_start", "range_end"
-            ),
-            dictionary,
-        ).select(
-            "conv_id", "subj_id", "pred_id", "obj_id",
-            "range_start", "range_end",
-        ),
-        sort_by=["subj_id", "pred_id", "obj_id"],
-    )
-
-    from . import terms as terms_mod
-
-    # terms emission rides the ranges table (RdfBuilder emits entity
-    # terms into the same RDF output stream, RdfBuilder.java:205-217)
-    stage(
-        "entity_terms",
-        lambda: terms_mod.entity_terms(ranges),
-        sort_by=["entity", "term_type"],
-    )
-
-    if candidates is not None and aliases is not None:
-        from . import reify
-
-        # the reified occurrence table feeds all three statement
-        # outputs; compute it once per run (lazy plan, each stage's
-        # write triggers it — the parse is extraction-shaped and cheap
-        # relative to a redundant coalesce pass)
-        occurrences = reify.reify_statements(bucketed, candidates, aliases)
+    bucketed = shared(lambda: transcripts.repartition(n_buckets, "conv_id"))
+    try:
         stage(
-            "statements",
-            lambda: reify.statement_nodes(occurrences),
+            "turns",
+            lambda: ordering.ordered_turns(bucketed()),
+            sort_by=["conv_id", "pos"],
+        )
+
+        # start_ts keeps the input's ts type (the fused plan rebuilds it
+        # from epoch micros as TIMESTAMP; parquet inputs may be
+        # TIMESTAMP_NTZ)
+        ts_type = transcripts.schema["ts"].dataType
+        ranges = stage(
+            "ranges",
+            lambda: construct.construct_ranges(
+                spark, bucketed(), candidates, aliases,
+                use_builtin_extractor=use_builtin_extractor,
+            ).withColumn("start_ts", F.col("start_ts").cast(ts_type)),
             sort_by=["subj", "pred", "obj"],
-        )
-        stage(
-            "statement_qualifiers",
-            lambda: reify.statement_qualifiers(occurrences),
-            sort_by=["stmt_id"],
-        )
-        stage(
-            "statement_references",
-            lambda: reify.statement_references(occurrences),
-            sort_by=["stmt_id"],
+            read_back=True,
         )
 
-    _write_metrics(spark, res, transcripts_count=None)
+        stage("triples", lambda: coalesce.to_range_arrays(ranges),
+              sort_by=["subj", "pred", "obj"])
+
+        from ..plans import views
+
+        stage("adjacency", lambda: views.adjacency(ranges), sort_by=["subj"])
+
+        from ..plans import encoding
+
+        def build_dictionary():
+            d = encoding.build_dictionary(ranges)
+            releases.append(lambda: encoding.release(d))
+            return d
+
+        dictionary = stage(
+            "dictionary", build_dictionary, sort_by=["id"], read_back=True
+        )
+        stage(
+            "triples_encoded",
+            lambda: encoding.encode_triples(
+                ranges.select(
+                    "conv_id", "subj", "pred", "obj", "range_start", "range_end"
+                ),
+                dictionary,
+            ).select(
+                "conv_id", "subj_id", "pred_id", "obj_id",
+                "range_start", "range_end",
+            ),
+            sort_by=["subj_id", "pred_id", "obj_id"],
+        )
+
+        from . import terms as terms_mod
+
+        # terms emission rides the ranges table (RdfBuilder emits entity
+        # terms into the same RDF output stream, RdfBuilder.java:205-217)
+        stage(
+            "entity_terms",
+            lambda: terms_mod.entity_terms(ranges),
+            sort_by=["entity", "term_type"],
+        )
+
+        if candidates is not None and aliases is not None:
+            from . import reify
+
+            # one occurrence pass feeds all three statement tables; it
+            # stays conv_id-clustered, so the family adds no shuffle
+            occurrences = shared(
+                lambda: reify.reify_statements(bucketed(), candidates, aliases)
+            )
+            stage(
+                "statements",
+                lambda: reify.statement_nodes(occurrences()),
+                sort_by=["subj", "pred", "obj"],
+            )
+            stage(
+                "statement_qualifiers",
+                lambda: reify.statement_qualifiers(occurrences()),
+                sort_by=["stmt_id"],
+            )
+            stage(
+                "statement_references",
+                lambda: reify.statement_references(occurrences()),
+                sort_by=["stmt_id"],
+            )
+    finally:
+        for release in releases:
+            release()
+
+    _write_metrics(res, transcripts_count=None)
     return res
 
 
-def _write_metrics(spark: SparkSession, res: PipelineResult, **extra) -> None:
+def _write_metrics(res: PipelineResult, **extra) -> None:
     """Metrics + per-partition lineage sink (S8/A7 analog of the
     reference's 1M-row progress logging, RocksTripleLoader.java:73-89).
+
+    Lineage is read from the written part files' parquet footers, so
+    it describes the write itself: rows per write-task partition index
+    (one key per part file unless a task split its output across
+    files), with no Spark job.
     """
     lineage = {}
     for name in ("ranges", "turns"):
         path = os.path.join(res.out_dir, name)
         if catalog.table_exists(path):
-            df = catalog.read_table(spark, path)
-            per_part = (
-                df.groupBy(F.spark_partition_id().alias("partition"))
-                .count()
-                .collect()
-            )
-            lineage[name] = {str(r["partition"]): r["count"] for r in per_part}
+            rows: dict[str, int] = {}
+            for f in sorted(os.listdir(path)):
+                if f.startswith("part-") and f.endswith(".parquet"):
+                    n = pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
+                    part = str(int(f.split("-")[1]))  # part-NNNNN-...
+                    rows[part] = rows.get(part, 0) + n
+            lineage[name] = rows
     payload = {
         "stages_run": res.stages_run,
         "stages_skipped": res.stages_skipped,

@@ -28,9 +28,17 @@ entity-linking + alias-canonicalization as the base pipeline, so the
 statement layer agrees with the triples layer term-for-term.
 
 Everything is columnar (regexp_extract_all + posexplode + per-element
-regexp_extract inside whole-stage codegen); the only shuffles are the
-final distincts and the best-rank window, all keyed on conv_id-prefixed
-keys that reuse an upstream hash partitioning when one exists.
+regexp_extract inside whole-stage codegen). The family's distincts and
+the best-rank window are all keyed on conv_id-prefixed keys, so on a
+conv_id-clustered input (run_pipeline's persisted occurrences) the
+family adds NO shuffle (Spark's subset rule); on an unclustered input
+`statement_nodes` adds one hash(conv_id, subj, pred) exchange and
+each other table one exchange for its distinct.
+
+The qualifier, reference and value-node distincts run on keys that
+carry conv_id, which is then dropped. stmt_id already hashes conv_id,
+so this differs from a distinct without conv_id only when two
+conversations' statements collide on the 64-bit stmt_id.
 """
 
 from __future__ import annotations
@@ -176,26 +184,24 @@ def statement_nodes(reified: DataFrame) -> DataFrame:
     best_rank): the statement-node table with BestRankFilter semantics
     (best_rank as 0/1 int for engine-stable hashing).
 
-    ONE exchange: the explicit repartition on (conv_id, subj, pred)
-    satisfies BOTH the distinct (its keys are a superset — equal rows
-    hash equal on the subset, Spark's subset rule) and the BestRank
-    window (exact key match), so neither adds a shuffle
-    (tests/test_reify_golden.py::test_statement_nodes_single_exchange)."""
-    nodes = (
+    The BestRank window runs BEFORE the distinct (duplicate rows do not
+    change its max), so the window's clustering on (conv_id, subj,
+    pred) also serves the 8-column distinct (subset rule): at most ONE
+    exchange, and none when the input is already clustered by conv_id
+    (tests/test_reify_golden.py::test_statement_nodes_single_exchange,
+    ::test_statement_family_adds_no_exchange_on_clustered_input)."""
+    w = Window.partitionBy("conv_id", "subj", "pred")
+    is_pref = F.when(F.col("stmt_rank") == "preferred", 1).otherwise(0)
+    has_pref = F.max(is_pref).over(w)
+    return (
         reified.select(
             "conv_id", "turn_idx", "stmt_id", "subj", "pred", "obj", "stmt_rank"
         )
-        .repartition("conv_id", "subj", "pred")
+        .withColumn(
+            "best_rank",
+            F.when(has_pref == 1, is_pref).otherwise(F.lit(1)).cast("int"),
+        )
         .distinct()
-    )
-    w = Window.partitionBy("conv_id", "subj", "pred")
-    has_pref = F.max(
-        F.when(F.col("stmt_rank") == "preferred", 1).otherwise(0)
-    ).over(w)
-    is_pref = F.when(F.col("stmt_rank") == "preferred", 1).otherwise(0)
-    return nodes.withColumn(
-        "best_rank",
-        F.when(has_pref == 1, is_pref).otherwise(F.lit(1)).cast("int"),
     )
 
 
@@ -240,12 +246,14 @@ def statement_qualifiers(reified: DataFrame) -> DataFrame:
     )
     return (
         q.select(
+            "conv_id",
             "stmt_id",
             "qual_pred",
             obj.alias("qual_obj"),
             snak_type.alias("snak_type"),
         )
         .distinct()
+        .drop("conv_id")
     )
 
 
@@ -263,7 +271,8 @@ def statement_value_nodes(reified: DataFrame) -> DataFrame:
 
     Identical values share one node — the reference's value-node
     dedup-by-hash. Pure projections + a 2-element explode; the only
-    shuffle is the final distinct."""
+    possible shuffle is the final distinct, and none on a conv_id-
+    clustered input."""
     vals = reified.filter(F.col("qual_obj").rlike(VALUE_RE))
     kc = F.substring("qual_obj", 1, 1)
     amt = _amt("qual_obj")
@@ -304,6 +313,7 @@ def statement_value_nodes(reified: DataFrame) -> DataFrame:
     v2 = F.when(kc == "V", F.lit("1")).when(kc == "T", F.lit("11")).otherwise(lon)
     return (
         vals.select(
+            "conv_id",
             "stmt_id",
             "qual_pred",
             val_id.alias("val_id"),
@@ -316,11 +326,12 @@ def statement_value_nodes(reified: DataFrame) -> DataFrame:
             ).alias("cv"),
         )
         .select(
-            "stmt_id", "qual_pred", "val_id", "kind",
+            "conv_id", "stmt_id", "qual_pred", "val_id", "kind",
             F.col("cv.comp").alias("comp"),
             F.col("cv.comp_value").alias("comp_value"),
         )
         .distinct()
+        .drop("conv_id")
     )
 
 
@@ -330,6 +341,7 @@ def statement_references(reified: DataFrame) -> DataFrame:
     return (
         reified.filter(F.col("ref_src") != "")
         .select(
+            "conv_id",
             "stmt_id",
             F.substring(
                 F.sha2(F.concat_ws(_SEP, F.lit("ref"), "ref_src"), 256), 1, 16
@@ -337,4 +349,5 @@ def statement_references(reified: DataFrame) -> DataFrame:
             "ref_src",
         )
         .distinct()
+        .drop("conv_id")
     )

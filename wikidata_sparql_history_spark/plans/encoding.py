@@ -120,9 +120,22 @@ def _rank_terms(
         .groupBy("bucket")
         .agg(F.coalesce(F.sum("lcnt"), F.lit(0)).alias("offset"))
     )
-    return local.join(F.broadcast(offsets), "bucket").select(
+    out = local.join(F.broadcast(offsets), "bucket").select(
         "term", (F.col("offset") + F.col("local_id")).alias("id")
     )
+    if checkpoint:
+        out._pinned = local  # for release()
+    return out
+
+
+def release(dictionary: DataFrame) -> None:
+    """Drop the ranked-term blocks `build_dictionary` pinned with
+    localCheckpoint; Spark frees them only when the JVM garbage-collects
+    the plan. Call it once every consumer of `dictionary` has run: the
+    frame cannot be evaluated afterwards."""
+    pinned = getattr(dictionary, "_pinned", None)
+    if pinned is not None:
+        pinned._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def encode_triples(triples: DataFrame, dictionary: DataFrame) -> DataFrame:

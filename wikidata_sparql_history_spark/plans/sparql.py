@@ -158,7 +158,10 @@ Semantics notes (deviations from full SPARQL 1.1 are explicit):
 - BIND supports the expression subset above (CONCAT, one arithmetic
   op, var/constant copy) — numeric operands cast to double. HAVING
   compares an aggregate (or its SELECT alias) against a numeric
-  constant; aggregate HAVING targets compile as hidden agg columns.
+  constant, numerically only: there is no string comparison, so a
+  GROUP_CONCAT target (direct or through its alias) is rejected
+  loudly, equality included. Aggregate HAVING targets compile as
+  hidden agg columns.
   ORDER BY may reference non-projected variables (sorted before the
   projection) except under DISTINCT, where order keys must be
   projected.
