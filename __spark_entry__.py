@@ -262,6 +262,7 @@ rparse AS (
 emap AS (
   SELECT d.mention, coalesce(c.canon, d.entity_id) AS entity
   FROM dict d LEFT JOIN canon c ON d.entity_id = c.src
+  UNION ALL SELECT src, canon FROM canon WHERE src NOT IN (SELECT mention FROM dict)
 ),
 rstmt AS (
   SELECT r.conv_id, r.turn_idx,

@@ -9,11 +9,13 @@ from wikidata_sparql_history_spark.pipeline.canonicalize import (
     canonical_map,
     canonicalize_triples,
     connected_components,
+    entity_map,
 )
 from wikidata_sparql_history_spark.pipeline.extract import extract_triples
 from wikidata_sparql_history_spark.pipeline.linking import (
     link_mentions,
     link_mentions_salted,
+    link_terms,
 )
 
 
@@ -125,3 +127,40 @@ def test_canonical_map_distributed_loop_matches_driver_path(spark):
     looped = canonical_map(edges, driver_threshold=0)
     via_loop = {(r.src, r.canon) for r in looped.collect()}
     assert via_loop == via_driver
+
+
+def test_entity_map_equals_link_then_canonicalize(spark):
+    """One rewrite through `entity_map` equals linking, then
+    canonicalizing — and each step alone when the other input is None.
+    The facts carry an alias src that is an unlinked mention (Q45), a
+    linked mention whose entity sits on a 2-hop alias chain (E45 → Q45
+    → Q20 → Q0), a linked mention that is not aliased (E3 → Q3) and an
+    unmapped term (X9)."""
+    facts = spark.createDataFrame(
+        [
+            ("c0", 1, "Q45", "P1", "E45"),
+            ("c0", 2, "E3", "P2", "X9"),
+            ("c1", 1, "X9", "P3", "Q45"),
+            ("c1", 2, "E45", "P4", "E3"),
+        ],
+        "conv_id string, turn_idx long, subj string, pred string, obj string",
+    )
+    cand, ali = synth.candidate_dict(spark), synth.alias_edges(spark)
+    cols = ["conv_id", "turn_idx", "subj", "pred", "obj"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    def mapped(c, a):
+        return rows(link_terms(facts, entity_map(c, a), ("subj", "obj")))
+
+    both = mapped(cand, ali)
+    assert both == rows(canonicalize_triples(link_mentions(facts, cand), ali))
+    assert both == [
+        ("c0", 1, "Q0", "P1", "Q0"),
+        ("c0", 2, "Q3", "P2", "X9"),
+        ("c1", 1, "X9", "P3", "Q0"),
+        ("c1", 2, "Q0", "P4", "Q3"),
+    ]
+    assert mapped(cand, None) == rows(link_mentions(facts, cand))
+    assert mapped(None, ali) == rows(canonicalize_triples(facts, ali))

@@ -5,6 +5,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from wikidata_sparql_history_spark.operators import (
     dedup,
@@ -50,7 +51,7 @@ def test_shingles_and_jaccard(spark):
     assert math.isclose(pairs[(1, 2)], 0.6, abs_tol=1e-4)
 
 
-def test_ngram_hot_shingle_cap_drops_ubiquitous(spark):
+def test_ngram_hot_shingle_cap_drops_ubiquitous(spark, monkeypatch):
     """Frequency cap: a shingle in > max_shingle_freq docs must not
     contribute candidate pairs, and the plan must broadcast the tiny
     hot set (anti-join), never the unbounded allowlist."""
@@ -65,9 +66,12 @@ def test_ngram_hot_shingle_cap_drops_ubiquitous(spark):
     assert uncapped.count() == 6  # all pairs share the hot shingle
     # plan-shape assertion on the pre-checkpoint plan (r7: the operator
     # materializes its inverted index before the self-join, which hides
-    # the anti-join from the final plan text)
+    # the anti-join from the final plan text), so localCheckpoint is
+    # patched to a no-op on the classic DataFrame, which overrides it
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint",
+                        lambda self, *a, **k: self)
     unmat = dedup.ngram_jaccard_pairs(d, n=3, threshold=0.01,
-                                      max_shingle_freq=3, materialize=False)
+                                      max_shingle_freq=3)
     plan = unmat._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti, BuildRight" in plan, plan[:2000]
 

@@ -15,7 +15,7 @@ N_CONV = 40
 
 STAGES = [
     "turns", "ranges", "triples", "adjacency", "dictionary",
-    "triples_encoded", "entity_terms",
+    "triples_encoded",
     "statements", "statement_qualifiers", "statement_references",
 ]
 RANGE_COLS = ["conv_id", "subj", "pred", "obj", "range_start", "range_end"]
@@ -60,6 +60,8 @@ def test_pipeline_end_to_end(spark, tmp_path):
     # ranges come from the fused plan: no intermediate fact tables
     assert not os.path.exists(os.path.join(out, "mentions"))
     assert not os.path.exists(os.path.join(out, "linked"))
+    # no reader uses entity terms; the store does not write them
+    assert not os.path.exists(os.path.join(out, "entity_terms"))
 
     # P/R vs closed-form expected per-turn facts (explode ranges back
     # to per-turn presence via the turns table)

@@ -248,3 +248,31 @@ def test_statement_family_adds_no_exchange_on_clustered_input(spark):
             assert _fact_path_exchanges(plan) == [], (fn.__name__, plan[:4000])
     finally:
         cached.unpersist()
+
+
+def test_statement_terms_resolve_like_ranges(spark):
+    """Statement and triples layers resolve terms through one map: a
+    surface form that is an alias src but not a dictionary mention is
+    canonicalized in both, not only in `ranges`."""
+    from wikidata_sparql_history_spark.pipeline.construct import construct_ranges
+
+    df = spark.createDataFrame(
+        [("c0", 1, "user", "[[E5]] <<P1>> [[E9]]", "", TS)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    cand = spark.createDataFrame(
+        [("E5", "Q5", 0.9)], "mention string, entity_id string, prior double"
+    )
+    ali = spark.createDataFrame([("E9", "Q3")], "src string, dst string")
+    stmts = reify.statement_nodes(reify.reify_statements(df, cand, ali))
+    assert {(r.subj, r.pred, r.obj) for r in stmts.collect()} == {
+        ("Q5", "P1", "Q3")
+    }
+    for builtin in (True, False):
+        ranges = construct_ranges(
+            spark, df, cand, ali, use_builtin_extractor=builtin
+        )
+        assert {(r.subj, r.pred, r.obj) for r in ranges.collect()} == {
+            ("Q5", "P1", "Q3")
+        }, builtin

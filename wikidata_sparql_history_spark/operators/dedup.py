@@ -80,7 +80,6 @@ def shingles(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
 def ngram_jaccard_pairs(
     docs: DataFrame, n: int = 3, threshold: float = 0.5,
     max_shingle_freq: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by n-gram Jaccard ≥ threshold.
 
@@ -114,11 +113,7 @@ def ngram_jaccard_pairs(
     # both join sides replanned the whole shingle pipeline (scan →
     # shingle → per-doc distinct → hot-set anti-join → count window),
     # and the hot-set aggregation scanned it a third time (guide §3.3).
-    # `materialize=False` exists only for plan-shape tests, which need
-    # the pre-checkpoint plan text (same pattern as
-    # encoding.build_dictionary's `checkpoint=False`).
-    if materialize:
-        sh = sh.localCheckpoint()
+    sh = sh.localCheckpoint()
     a = sh.selectExpr("doc_id as id1", "n_sh as n1", "shingle")
     b = sh.selectExpr("doc_id as id2", "n_sh as n2", "shingle")
     eps = 1e-9

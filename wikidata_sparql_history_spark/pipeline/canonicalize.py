@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .linking import link_terms
+from .linking import link_terms, resolve_dict
 
 MAX_ITERS = 50
 
@@ -95,7 +95,6 @@ def _cache_key(alias_edges: DataFrame) -> tuple | None:
 
 def canonical_map(
     alias_edges: DataFrame,
-    max_iters: int = MAX_ITERS,
     driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """(src, canon): terminal representative for every aliased node.
@@ -140,7 +139,7 @@ def canonical_map(
         )
     m = edges
     converged = False
-    for _ in range(max_iters):
+    for _ in range(MAX_ITERS):
         nxt = m.selectExpr("src as j_src", "dst as j_dst")
         # plain shuffle join: the map is the BIG side here (the loop
         # only runs above driver_threshold), so forcing a broadcast of
@@ -163,7 +162,7 @@ def canonical_map(
         m = m2
     if not converged:
         raise ValueError(
-            f"canonical_map did not converge in {max_iters} path-halving "
+            f"canonical_map did not converge in {MAX_ITERS} path-halving "
             "rounds — alias edges likely contain a cycle; route through "
             "connected_components() for general graphs"
         )
@@ -173,7 +172,7 @@ def canonical_map(
     return result
 
 
-def connected_components(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """General undirected CC via hash-min label propagation.
 
     Returns (node, component) where component = min node id of the
@@ -190,7 +189,7 @@ def connected_components(edges: DataFrame, max_iters: int = MAX_ITERS) -> DataFr
     ).localCheckpoint()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("component", F.col("node"))
-    for _ in range(max_iters):
+    for _ in range(MAX_ITERS):
         # neighbor's current label, propagated
         prop = (
             sym.join(labels, sym["dst"] == labels["node"])
@@ -229,3 +228,29 @@ def canonicalize_triples(
     return link_terms(triples, cmap, ("subj", "obj")).select(
         "conv_id", "turn_idx", "subj", "pred", "obj"
     )
+
+
+def entity_map(
+    candidates: DataFrame | None, alias_edges: DataFrame | None
+) -> DataFrame:
+    """(term, entity): link-then-canonicalize as ONE rewrite map — the
+    argmax-prior candidate (`resolve_dict`), then its alias-canonical
+    representative. Every dictionary mention maps to
+    canon(resolve(mention)); every alias src that is not a dictionary
+    mention maps to canon(src). With one input None the map is the
+    other step alone (at least one must be given). `link_terms` passes
+    misses through, so one rewrite through this map equals linking,
+    then canonicalizing. Both the triples layer (construct_ranges) and
+    the statement layer (reify_statements) resolve their terms
+    through it."""
+    if alias_edges is not None:
+        cmap = canonical_map(alias_edges).toDF("term", "entity")
+        if candidates is None:
+            return cmap
+    best = resolve_dict(candidates).select(
+        F.col("mention").alias("term"), F.col("entity_id").alias("entity")
+    )
+    if alias_edges is None:
+        return best
+    linked = link_terms(best, cmap, ("entity",)).select("term", "entity")
+    return linked.unionByName(cmap.join(best.select("term"), "term", "left_anti"))

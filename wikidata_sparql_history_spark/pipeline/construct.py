@@ -4,8 +4,9 @@ minimal-shuffle scale path.
 `construct_ranges` composes the stage modules into one plan, as the
 reference builds a page's revision ranges in one pass
 (RevisionFileConverter.java:128-164): ordering.turn_window →
-extract.extract_facts → linking.link_terms (resolve_dict, then
-canonical_map) → per-turn dedup → coalesce.islands. Chaining the
+extract.extract_facts → linking.link_terms over
+canonicalize.entity_map (link, then canonicalize, as one broadcast
+join per column) → per-turn dedup → coalesce.islands. Chaining the
 stages as separate tables shuffles the full fact stream at each
 boundary; composed, the plan has at most TWO wide exchanges:
 
@@ -18,8 +19,8 @@ boundary; composed, the plan has at most TWO wide exchanges:
 Everything after the last exchange is shuffle-free by Spark's subset
 rule: `HashPartitioning(conv_id)` satisfies `ClusteredDistribution(
 conv_id, …)` for the dedup aggregation, the island window and the
-range aggregation. Linking and canonicalization are broadcast joins,
-which keep the streamed side's partitioning. The turns join is gone:
+range aggregation. Linking is a broadcast join, which keeps the
+streamed side's partitioning. The turns join is gone:
 the turn-window columns (pos, next_turn_idx, ts) ride along with each
 fact as extractor metadata.
 
@@ -33,8 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import canonicalize as canon_mod
-from . import coalesce, extract, linking, ordering
+from . import canonicalize, coalesce, extract, linking, ordering
 
 # ts crosses the Arrow boundary as epoch microseconds: pandas
 # timestamp[ns] caps at year 2262, while Spark/our corpus allow wider
@@ -48,7 +48,6 @@ def construct_ranges(
     transcripts: DataFrame,
     candidates: DataFrame | None = None,
     aliases: DataFrame | None = None,
-    n_buckets: int | None = None,
     use_builtin_extractor: bool = False,
 ) -> DataFrame:
     """transcripts → coalesced validity ranges (conv_id, subj, pred,
@@ -60,19 +59,15 @@ def construct_ranges(
     exchange instead of two). Output identical
     (tests/test_construct_fused.py).
     """
-    n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # exchange 1: conv_id clustering for the turn window. An explicit
-    # repartition is only issued when the caller pinned a bucket count;
-    # otherwise the window's ClusteredDistribution makes
-    # EnsureRequirements insert the identical hash(conv_id) exchange at
-    # spark.sql.shuffle.partitions — and SKIP it when the input is
-    # already hash-partitioned by conv_id (transcripts_from_events and
-    # run_pipeline's input are), so the wide `text` column never
-    # crosses a shuffle (guide §2.4: remove shuffles outright).
-    t = transcripts.repartition(n_buckets, "conv_id") if n_buckets else transcripts
+    # exchange 1: conv_id clustering for the turn window. The window's
+    # ClusteredDistribution makes EnsureRequirements insert the
+    # hash(conv_id) exchange at spark.sql.shuffle.partitions — and SKIP
+    # it when the input is already hash-partitioned by conv_id
+    # (transcripts_from_events and run_pipeline's input are), so the
+    # wide `text` column never crosses a shuffle (guide §2.4: remove
+    # shuffles outright).
     ordered = ordering.turn_window(
-        t,
+        transcripts,
         # cast: parquet timestamps may arrive as TIMESTAMP_NTZ, which
         # unix_micros rejects; session tz is UTC so the cast is exact
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -82,14 +77,12 @@ def construct_ranges(
     facts = extract.extract_facts(ordered, _META, builtin=use_builtin_extractor)
     if not use_builtin_extractor:
         # exchange 2: re-establish conv_id co-location after the UDF
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         facts = facts.repartition(n, "conv_id")
 
-    if candidates is not None:
-        best = linking.resolve_dict(candidates).select("mention", "entity_id")
-        facts = linking.link_terms(facts, best, ("subj", "obj"))
-    if aliases is not None:
-        cmap = canon_mod.canonical_map(aliases)
-        facts = linking.link_terms(facts, cmap, ("subj", "obj"))
+    if candidates is not None or aliases is not None:
+        emap = canonicalize.entity_map(candidates, aliases)
+        facts = linking.link_terms(facts, emap, ("subj", "obj"))
 
     # per-turn dedup (linking/canonicalization can merge two mentions
     # into one entity): aggregation on conv_id-prefixed keys — no

@@ -15,8 +15,7 @@ Stages (each an idempotent table write; resume skips completed ones):
      reference's on-disk layout is long-encoded (RocksStore.java:
      403-453), and downstream snapshot scans over the encoded table
      compare longs, never strings (plans/encoding.py)
-  6. entity_terms — entity term rows (pipeline/terms.py)
-  7. statements / statement_qualifiers / statement_references —
+  6. statements / statement_qualifiers / statement_references —
      the reification layer (pipeline/reify.py; only when candidates
      AND aliases are provided, since its terms are linked)
 
@@ -40,8 +39,8 @@ whose consumers all skip computes neither. Both are released in a
 is the dictionary's localCheckpoint pin (`encoding.release`).
 
 Only the tables a later stage consumes are read back from disk:
-`ranges` (triples, adjacency, dictionary, triples_encoded,
-entity_terms) and `dictionary` (triples_encoded).
+`ranges` (triples, adjacency, dictionary, triples_encoded) and
+`dictionary` (triples_encoded).
 
 Per-stage seconds and per-partition lineage land in metrics.json next
 to the tables (north rule: "per-partition lineage and metrics sinks").
@@ -182,16 +181,6 @@ def run_pipeline(
             sort_by=["subj_id", "pred_id", "obj_id"],
         )
 
-        from . import terms as terms_mod
-
-        # terms emission rides the ranges table (RdfBuilder emits entity
-        # terms into the same RDF output stream, RdfBuilder.java:205-217)
-        stage(
-            "entity_terms",
-            lambda: terms_mod.entity_terms(ranges),
-            sort_by=["entity", "term_type"],
-        )
-
         if candidates is not None and aliases is not None:
             from . import reify
 
@@ -219,11 +208,11 @@ def run_pipeline(
         for release in releases:
             release()
 
-    _write_metrics(res, transcripts_count=None)
+    _write_metrics(res)
     return res
 
 
-def _write_metrics(res: PipelineResult, **extra) -> None:
+def _write_metrics(res: PipelineResult) -> None:
     """Metrics + per-partition lineage sink (S8/A7 analog of the
     reference's 1M-row progress logging, RocksTripleLoader.java:73-89).
 
@@ -248,7 +237,6 @@ def _write_metrics(res: PipelineResult, **extra) -> None:
         "stages_skipped": res.stages_skipped,
         "stage_metrics": res.metrics,
         "partition_lineage": lineage,
-        **{k: v for k, v in extra.items() if v is not None},
     }
     with open(os.path.join(res.out_dir, "metrics.json"), "w") as f:
         json.dump(payload, f, indent=2)

@@ -23,9 +23,10 @@ ValueSnak, '?' = SomeValueSnak, '!' = NoValueSnak.)
   snak, the same content-hashing the reference applies to reference
   nodes (RdfBuilder.java:261-265).
 
-Value-side terms (subj / obj / qualifier object) run through the same
-entity-linking + alias-canonicalization as the base pipeline, so the
-statement layer agrees with the triples layer term-for-term.
+Value-side terms (subj / obj / qualifier object) resolve through
+`canonicalize.entity_map`, the same link-then-canonicalize map the
+triples layer (construct.construct_ranges) uses, so the two layers
+agree term-for-term by construction.
 
 Everything is columnar (regexp_extract_all + posexplode + per-element
 regexp_extract inside whole-stage codegen). The family's distincts and
@@ -46,7 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import canonicalize, linking
+from . import linking
+from .canonicalize import entity_map
 from .extract import MENTION_RE
 
 # one reified segment; inner markers are optional so the base grammar's
@@ -138,16 +140,6 @@ def reified_segments(transcripts: DataFrame) -> DataFrame:
         F.regexp_extract(seg, r"\(\((P\d+):[^)]+\)\)", 1).alias("qual_pred"),
         F.regexp_extract(seg, r"\(\(P\d+:([^)]+)\)\)", 1).alias("qual_obj"),
         F.regexp_extract(seg, r"\{\{(S\d+)\}\}", 1).alias("ref_src"),
-    )
-
-
-def entity_map(candidates: DataFrame, alias_edges: DataFrame) -> DataFrame:
-    """(mention, entity): argmax-prior candidate, alias-canonicalized —
-    the composed link+canon dimension, built once and broadcast."""
-    best = linking.resolve_dict(candidates).select("mention", "entity_id")
-    cmap = canonicalize.canonical_map(alias_edges)
-    return linking.link_terms(best, cmap, ("entity_id",)).select(
-        "mention", F.col("entity_id").alias("entity")
     )
 
 

@@ -33,7 +33,6 @@ def _distinct_terms(triples: DataFrame) -> DataFrame:
 def build_dictionary(
     triples: DataFrame,
     num_partitions: int | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(term, id): every distinct subj/pred/obj, densely numbered 1..N
     in global term order.
@@ -52,7 +51,7 @@ def build_dictionary(
     non-overlapping bucketing enumerates the sorted term sequence
     identically — so output matches the oracle's global dense_rank.
     """
-    return _rank_terms(_distinct_terms(triples), num_partitions, checkpoint)
+    return _rank_terms(_distinct_terms(triples), num_partitions)
 
 
 def extend_dictionary(
@@ -82,11 +81,7 @@ def extend_dictionary(
     return existing.select("term", "id").unionByName(appended)
 
 
-def _rank_terms(
-    terms: DataFrame,
-    num_partitions: int | None = None,
-    checkpoint: bool = True,
-) -> DataFrame:
+def _rank_terms(terms: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """The distributed global rank over a distinct (term) table —
     shared by build_dictionary (all terms) and extend_dictionary
     (new terms only)."""
@@ -104,10 +99,7 @@ def _rank_terms(
     # (plan canonicalization changes / Connect could split them into
     # two shuffles with different sampled boundaries → wrong ids);
     # localCheckpoint makes both consumers read the same blocks.
-    # (`checkpoint=False` exists only for the plan-shape test, which
-    # needs the pre-checkpoint plan text to assert on.)
-    if checkpoint:
-        local = local.localCheckpoint()
+    local = local.localCheckpoint()
     counts = local.groupBy("bucket").agg(F.count("*").alias("cnt"))
     # offsets: one row per bucket — metadata-sized. A running-sum window
     # would add an Exchange SinglePartition node; a broadcast non-equi
@@ -123,8 +115,7 @@ def _rank_terms(
     out = local.join(F.broadcast(offsets), "bucket").select(
         "term", (F.col("offset") + F.col("local_id")).alias("id")
     )
-    if checkpoint:
-        out._pinned = local  # for release()
+    out._pinned = local  # for release()
     return out
 
 

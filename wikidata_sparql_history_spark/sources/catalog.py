@@ -29,7 +29,6 @@ def write_table(
     df: DataFrame,
     path: str,
     sort_by: list[str] | None = None,
-    partition_by: list[str] | None = None,
 ) -> None:
     """Write a stage output. `sort_by` = within-partition sort so
     parquet min/max stats support data skipping (the analog of the
@@ -37,10 +36,7 @@ def write_table(
     """
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode("overwrite").parquet(path)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
