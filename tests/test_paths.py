@@ -32,6 +32,29 @@ def test_closure_seeded(spark):
     assert got == {("a", "b"), ("a", "c")}
 
 
+def test_closure_materializes_once_per_round(spark, monkeypatch):
+    """Seeded chain a→b→c→d→e: the edge table, the seeded frontier and
+    one block per round (three that find a new pair, one that finds
+    none) are checkpointed — `reached` is the union of those blocks,
+    not a fresh copy each round. Spark 4.1 overrides localCheckpoint in
+    the classic DataFrame subclass, so that is the class to wrap."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")])
+    seeds = spark.createDataFrame([("a",)], "src string")
+    calls = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def counted(self, *a, **k):
+        calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", counted)
+    got = {tuple(r) for r in paths.transitive_closure(e, seeds=seeds).collect()}
+    assert got == {("a", "b"), ("a", "c"), ("a", "d"), ("a", "e")}
+    assert len(calls) == 2 + 4
+
+
 def test_closure_max_hops(spark):
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
     got = {tuple(r) for r in paths.transitive_closure(e, max_hops=2).collect()}

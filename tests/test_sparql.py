@@ -395,6 +395,81 @@ def test_path_repeated_var_cycle(spark):
     assert rows(sparql.evaluate(cyc, q)) == {("a",), ("b",)}
 
 
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_path_seed_and_values_are_local_relations(spark, monkeypatch):
+    """The bound-subject seed of p+/p* and a VALUES relation are built
+    driver-side as a LocalTableScan, not a pickled Python RDD (which
+    plans as ExistingRDD and runs a Python-worker job per query)."""
+    from wikidata_sparql_history_spark.plans import paths
+
+    seeds = []
+    for name in ("transitive_closure", "zero_or_more"):
+        real = getattr(paths, name)
+
+        def wrapped(*a, _real=real, **k):
+            seeds.append(k["seeds"])
+            return _real(*a, **k)
+
+        monkeypatch.setattr(paths, name, wrapped)
+    values = []
+    real_join = sparql._join
+
+    def join(acc, bound, df, vs, how="inner"):
+        if set(df.columns) == {"v_a", "v_b"}:
+            values.append(df)
+        return real_join(acc, bound, df, vs, how)
+
+    monkeypatch.setattr(sparql, "_join", join)
+    g = path_graph(spark)
+    sparql.evaluate(g, "SELECT DISTINCT ?o WHERE { a P1+ ?o }")
+    sparql.evaluate(g, "SELECT DISTINCT ?o WHERE { b P1* ?o }")
+    sparql.evaluate(
+        g, "SELECT ?a ?b WHERE { VALUES (?a ?b) { (a b) (c UNDEF) } }")
+    # p* reaches transitive_closure through zero_or_more: 1 + 2 seeds
+    assert len(seeds) == 3 and len(values) == 1
+    for df in seeds + values:
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_seeded_path_and_values_undef_on_encoded_surface(spark):
+    """A seeded p+/p* and a VALUES block with UNDEF over an int64 graph
+    answer the string surface's answers mapped through the encoder,
+    with UNDEF staying NULL on the long columns."""
+    triples = [tuple(r) for r in path_graph(spark).collect()]
+    terms = sorted({t for row in triples for t in row} | {"zz"})
+    enc = {t: 100 + i for i, t in enumerate(terms)}
+    g_long = spark.createDataFrame(
+        [tuple(enc[t] for t in row) for row in triples],
+        "subj long, pred long, obj long",
+    )
+
+    def encode(term):
+        return enc[sparql.string_form(term)]
+
+    for q in (
+        "SELECT DISTINCT ?o WHERE { a P1+ ?o }",
+        "SELECT DISTINCT ?o WHERE { b P1* ?o }",
+        "SELECT DISTINCT ?o WHERE { zz P1* ?o }",
+        "SELECT ?a ?b WHERE { VALUES (?a ?b) { (a b) (c UNDEF) } }",
+        "SELECT ?s ?o WHERE { ?s P1 ?o . VALUES ?s { a c zz } }",
+    ):
+        want = {
+            tuple(None if v is None else enc[v] for v in r)
+            for r in rows(sparql.evaluate(path_graph(spark), q))
+        }
+        got_df = sparql.evaluate(g_long, q, encode_const=encode)
+        assert {t for _, t in got_df.dtypes} == {"bigint"}, q
+        assert rows(got_df) == want, q
+    q = "SELECT ?a ?b WHERE { VALUES (?a ?b) { (a b) (c UNDEF) } }"
+    assert rows(sparql.evaluate(g_long, q, encode_const=encode)) == {
+        (enc["a"], enc["b"]), (enc["c"], None)
+    }
+
+
 # --- MINUS / EXISTS / VALUES / globalStateAt ------------------------------
 
 def test_minus_removes_shared_solutions(spark):

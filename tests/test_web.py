@@ -15,7 +15,7 @@ from tests.test_cli import store  # noqa: F401  (module-scoped fixture)
 
 
 def call(app, method="GET", path="/sparql", query=None, accept=None,
-         body=None, ctype=None):
+         body=None, ctype=None, length=None):
     environ = {
         "REQUEST_METHOD": method,
         "PATH_INFO": path,
@@ -23,7 +23,7 @@ def call(app, method="GET", path="/sparql", query=None, accept=None,
         "wsgi.input": io.BytesIO(body or b""),
     }
     if body is not None:
-        environ["CONTENT_LENGTH"] = str(len(body))
+        environ["CONTENT_LENGTH"] = length or str(len(body))
         environ["CONTENT_TYPE"] = ctype or ""
     if query is not None:
         from urllib.parse import quote
@@ -100,3 +100,14 @@ def test_errors_keep_serving(app):
     assert call(app, method="PUT", query="x")[0].startswith("405")
     assert call(app, query="ASK { ?s P0 ?o }",
                 accept="text/html")[0].startswith("406")
+
+
+def test_negative_content_length_is_rejected(app):
+    # read(-1) would read the socket to EOF and block a real server's
+    # worker; the body is a valid form query, so only the length can
+    # make this a 400
+    from urllib.parse import quote
+    body = ("query=" + quote("ASK { Q7 P0 ?o }")).encode()
+    status, _, out = call(app, method="POST", body=body, length="-1",
+                          ctype="application/x-www-form-urlencoded")
+    assert status.startswith("400") and b"bad Content-Length" in out

@@ -5,12 +5,15 @@ PropertyPathOptimizer.java:19-91 and evaluated via RDF4J's
 ArbitraryLengthPath. The Spark shape is an iterative frontier BFS:
 
 - seed with the 1-hop edges (the optimizer's "seed with one step"
-  rewrite),
+  rewrite); bound origins are semi-joined into them, so a one-row seed
+  adds no shuffle,
 - each round joins the frontier with the edge table and anti-joins the
   visited set (cycle-safe: a node reached twice contributes nothing
   new, so the loop terminates on any finite graph),
-- ``localCheckpoint()`` cuts lineage every round so the plan doesn't
-  grow exponentially (same pattern as canonicalize.py).
+- each round's new pairs are materialized once (``localCheckpoint()``,
+  which cuts lineage so the plan doesn't grow exponentially — same
+  pattern as canonicalize.py); the visited set is the union of those
+  per-round blocks, never re-copied.
 
 Scale notes (100 TB): each round is one shuffle join keyed on the
 frontier's ``dst``; the visited anti-join is keyed on (src, dst). An
@@ -37,8 +40,18 @@ def transitive_closure(
     returns to the origin, as in ArbitraryLengthPath).
 
     edges: (src, dst). seeds: optional one-column DataFrame (``src``)
-    restricting origins — the bound-subject rewrite. max_hops: optional
-    depth cap (``p{1,n}``); None = unbounded (cycle-safe regardless).
+    restricting origins — the bound-subject rewrite, applied as a
+    semi-join of the edge table (duplicate seeds change nothing).
+    max_hops: optional depth cap (``p{1,n}``); None = unbounded
+    (cycle-safe regardless).
+
+    Materializations: the distinct edge table once, the seeded first
+    frontier once, then one block per round (that round's new pairs).
+    `reached` is the union of the frontier and the round blocks; they
+    are pairwise disjoint because each round anti-joins everything
+    reached before it, so the union needs no distinct. The loop stops
+    at the hop limit (MAX_HOPS_DEFAULT unless max_hops is given), so
+    the union has at most that many scans.
     """
     # r7: materialize the deduped edge table ONCE. Every BFS round
     # joins against `e`; without the checkpoint each round re-evaluated
@@ -47,8 +60,8 @@ def transitive_closure(
     # §2.4/§5). One eager localCheckpoint turns that into one pass.
     e = edges.select("src", "dst").distinct().localCheckpoint()
     if seeds is not None:
-        frontier = (
-            seeds.select("src").distinct().join(e, "src").select("src", "dst")
+        frontier = e.join(
+            seeds.select("src"), "src", "left_semi"
         ).localCheckpoint()
     else:
         frontier = e  # already materialized above — no second copy
@@ -65,7 +78,7 @@ def transitive_closure(
         fresh = nxt.join(reached, ["src", "dst"], "left_anti").localCheckpoint()
         if fresh.isEmpty():
             return reached
-        reached = reached.unionByName(fresh).localCheckpoint()
+        reached = reached.unionByName(fresh)
         frontier = fresh
         hops += 1
     if max_hops is None:
@@ -146,7 +159,7 @@ def zero_or_more(
         ).distinct()
     if seeds is not None:
         nodes = nodes.join(
-            seeds.select(F.col("src").alias("node")).distinct(), "node"
+            seeds.select(F.col("src").alias("node")), "node", "left_semi"
         )
     identity = nodes.select(
         F.col("node").alias("src"), F.col("node").alias("dst")

@@ -142,8 +142,10 @@ Semantics notes (deviations from full SPARQL 1.1 are explicit):
 - Property paths in the predicate position compile to plans/paths.py
   building blocks (the PropertyPathOptimizer.java:19-91 rewrites):
   ``p+`` → frontier-BFS transitive_closure (with the bound-subject
-  seed rewrite when the subject is a constant), ``p*``/``p?`` add the
-  zero-length identity over the graph's subject∪object universe,
+  seed rewrite when the subject is a constant: the seed is a one-row
+  Arrow-built local relation, semi-joined into the first frontier —
+  no job, no Python worker, independent of the graph), ``p*``/``p?``
+  add the zero-length identity over the graph's subject∪object universe,
   ``^p`` inverse, ``p1/p2`` sequence join, ``p1|p2`` union,
   ``!(p1|p2)`` predicate-exclusion scan. Paths traverse the triple
   store only — magic predicates are not addressable inside a path.
@@ -151,7 +153,8 @@ Semantics notes (deviations from full SPARQL 1.1 are explicit):
   MinusIteration); with NO shared variables it removes nothing (SPARQL
   MINUS semantics). FILTER EXISTS / NOT EXISTS → left-semi/left-anti
   join, correlated on the shared variables (at least one required).
-  VALUES → an inline literal relation joined in (UNDEF → NULL).
+  VALUES → an inline literal relation (Arrow-built, the same
+  constant-relation helper as the path seed) joined in (UNDEF → NULL).
 - hist:globalStateAt (RocksTripleSource.java:739-768): the subject
   binds to the first turn at-or-after a constant ISO-dateTime object,
   one per conversation (the W4 as-of lookup).
@@ -200,6 +203,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional as Opt
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1297,6 +1301,17 @@ class _Ctx:
             return self.encode_const(term)
         return string_form(term)
 
+    def local_rows(self, names, rows, typ: str) -> DataFrame:
+        """Constant `rows` as a relation with one `typ` column per
+        name. Built from a pandas frame, so the session's Arrow path
+        plans it as a LocalTableScan: no job, no Python worker (a
+        Python list goes through a pickled RDD and runs a job per
+        call). dtype=object keeps a None cell NULL on a long column."""
+        return self.spark.createDataFrame(
+            pd.DataFrame(list(rows), columns=list(names), dtype=object),
+            ", ".join(f"{n} {typ}" for n in names),
+        )
+
     def source(self, graph):
         """(subj, pred, obj) relation for the active graph context;
         for a variable GRAPH, (gctx, subj, pred, obj) with gctx the
@@ -1420,14 +1435,14 @@ def _path_edges(p, g: DataFrame, ctx: _Ctx, seed=None) -> DataFrame:
             _path_edges(p.p, g, ctx), seeds=seed
         )
     if isinstance(p, PathStar):
-        nodes = _node_universe(g)
         if seed is not None:
-            # a bound subject is in the zero-length identity domain
-            # even when absent from the graph (SPARQL ZeroOrMorePath:
-            # <s> p* ?o always yields (s, s)) — round-5 advice
-            nodes = nodes.unionByName(
-                seed.select(F.col("src").alias("node"))
-            ).distinct()
+            # a bound subject is its own zero-length solution even when
+            # absent from the graph (SPARQL ZeroOrMorePath: <s> p* ?o
+            # always yields (s, s)), and the identity restricted to the
+            # seed is the seed — no scan of g's node universe
+            nodes = seed.select(F.col("src").alias("node"))
+        else:
+            nodes = _node_universe(g)
         return paths.zero_or_more(
             _path_edges(p.p, g, ctx), nodes=nodes, seeds=seed
         )
@@ -1497,14 +1512,14 @@ def _compile_pattern(pat: Pattern, ctx: _Ctx, graph):
         ):
             # bound-subject rewrite: seed the closure at the constant
             # (the "seed with one step" PropertyPathOptimizer rewrite).
-            # The one-row seed is a driver-local relation — NOT derived
-            # from g, whose emptiness would otherwise lose the
-            # zero-length (const, const) solution of p* (round-5
-            # advice: SPARQL ZeroOrMorePath yields the bound subject
-            # regardless of the graph's contents)
+            # The one-row seed is an Arrow-built local relation (no
+            # job, no Python worker) and does NOT depend on g, whose
+            # emptiness would otherwise lose the zero-length
+            # (const, const) solution of p* (SPARQL ZeroOrMorePath
+            # yields the bound subject regardless of the graph)
             sval = ctx.const(pat.s)
             styp = "long" if isinstance(sval, int) else "string"
-            seed = ctx.spark.createDataFrame([(sval,)], f"src {styp}")
+            seed = ctx.local_rows(["src"], [(sval,)], styp)
         rel = _path_edges(pat.p, g, ctx, seed=seed)
         positions = [("src", pat.s), ("dst", pat.o)]
     elif (isinstance(pat.p, Iri)
@@ -1795,10 +1810,9 @@ def _compile_group_ex(group: tuple, ctx: _Ctx, graph, outer_bound):
                 [None if c is None else ctx.const(c) for c in row]
                 for row in el.rows
             ]
-            vdf = ctx.spark.createDataFrame(
-                cells, ", ".join(f"v_{n} string" for n in el.names)
-            ) if ctx.encode_const is None else ctx.spark.createDataFrame(
-                cells, ", ".join(f"v_{n} long" for n in el.names)
+            vdf = ctx.local_rows(
+                [f"v_{n}" for n in el.names], cells,
+                "string" if ctx.encode_const is None else "long",
             )
             acc, bound = _join(acc, bound, vdf, set(el.names))
         elif isinstance(el, GraphBlock):

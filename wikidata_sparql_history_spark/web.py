@@ -70,6 +70,10 @@ _CONTENT_TYPES = {
 }
 
 
+class _BadRequest(ValueError):
+    pass
+
+
 def _extract_query(environ) -> str | None:
     if environ.get("REQUEST_METHOD") == "GET":
         qs = parse_qs(environ.get("QUERY_STRING", ""))
@@ -80,6 +84,9 @@ def _extract_query(environ) -> str | None:
         length = int(environ.get("CONTENT_LENGTH") or 0)
     except ValueError:
         length = 0
+    if length < 0:
+        # read(-1) would read the socket to EOF and block the worker
+        raise _BadRequest("bad Content-Length")
     body = environ["wsgi.input"].read(length).decode("utf-8") if length else ""
     ctype = (environ.get("CONTENT_TYPE") or "").split(";")[0].strip().lower()
     if ctype == "application/sparql-query":
@@ -127,7 +134,12 @@ def make_app(spark, store: str, max_rows: int = 1000):
                            [("Content-Type", "text/plain")])
             return [(", ".join(sorted(set(_FORMATS) - {"*/*"})) + "\n")
                     .encode()]
-        query = _extract_query(environ)
+        try:
+            query = _extract_query(environ)
+        except _BadRequest as e:
+            start_response("400 Bad Request",
+                           [("Content-Type", "text/plain")])
+            return [f"{e}\n".encode()]
         if not query:
             start_response("400 Bad Request",
                            [("Content-Type", "text/plain")])
