@@ -42,6 +42,7 @@ from wikidata_sparql_history_spark.pipeline import (
     reify,
 )
 from wikidata_sparql_history_spark.plans import encoding, paths, views
+from wikidata_sparql_history_spark.session import local_relation
 from wikidata_sparql_history_spark.streaming import incremental
 
 PLANT_OFFSET = 1_000_000  # planted-duplicate id offset for invariant oracles
@@ -549,7 +550,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (the KG has P0 self-loops and multi-hop Q-entity cycles)
         r = _kg_ranges(spark, sf)
         edges = r.selectExpr("subj AS src", "obj AS dst").distinct()
-        seeds = spark.createDataFrame([("Q0",), ("Q7",)], "src string")
+        seeds = local_relation(spark, ["src"], [("Q0",), ("Q7",)], "string")
         return paths.transitive_closure(edges, seeds=seeds).select("src", "dst")
 
     q["kg_closure"] = kg_closure

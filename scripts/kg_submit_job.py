@@ -7,11 +7,16 @@ Cluster launch (north rule):
         [--master spark://... --num-executors N ...] \
         scripts/kg_submit_job.py \
         --input /path/to/transcripts_parquet --output /path/out \
+        [--candidates DICT_PARQUET --aliases ALIAS_PARQUET] \
         [--resume] [--n-synth 1000]
 
 On a real cluster the SparkSession comes from the submit config; this
-script only declares the job. `--n-synth` synthesizes a deterministic
-corpus instead of reading --input (sandbox smoke mode).
+script only declares the job. `--candidates` / `--aliases` are the
+linking dictionary and the alias edges; without them the build is
+unlinked (raw mention terms, no statement tables). `--n-synth`
+synthesizes a deterministic corpus instead of reading --input, and
+links it against the synthetic dictionaries unless those paths are
+given (sandbox smoke mode).
 """
 
 from __future__ import annotations
@@ -32,6 +37,9 @@ def main() -> int:
     ap.add_argument("--resume", action="store_true",
                     help="skip stages whose output tables already exist")
     ap.add_argument("--builtin-extractor", action="store_true")
+    ap.add_argument("--candidates", help="linking dictionary parquet "
+                    "(mention, entity_id, prior)")
+    ap.add_argument("--aliases", help="alias edges parquet (src, dst)")
     args = ap.parse_args()
 
     spark = SparkSession.builder.appName("kg-construct-submit").getOrCreate()
@@ -48,12 +56,17 @@ def main() -> int:
         print("need --input or --n-synth", file=sys.stderr)
         return 2
 
+    def dictionary(path, synthetic):
+        if path:
+            return spark.read.parquet(path)
+        return synthetic(spark) if args.n_synth else None
+
     res = run_pipeline(
         spark,
         transcripts,
         args.output,
-        candidates=synth.candidate_dict(spark),
-        aliases=synth.alias_edges(spark),
+        candidates=dictionary(args.candidates, synth.candidate_dict),
+        aliases=dictionary(args.aliases, synth.alias_edges),
         resume=args.resume,
         use_builtin_extractor=args.builtin_extractor,
     )

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import io
 import json
+import os
 
 import pytest
 
@@ -151,3 +152,34 @@ def test_cli_build_and_query_roundtrip(spark, tmp_path):
     cli.main(["--store", store, "-q", "ASK { ?s ?p ?o }"],
              spark=spark, out=buf3)
     assert buf3.getvalue().splitlines()[1] == "true"
+
+
+def test_cli_build_links_only_against_given_dictionaries(spark, tmp_path):
+    # a real transcripts parquet is never linked against the synthetic
+    # dictionaries: without --candidates/--aliases the build is
+    # unlinked; with both it links and writes the statement tables
+    tpath = str(tmp_path / "transcripts")
+    synth.transcripts(spark, 10, shuffled=False).write.parquet(tpath)
+    cpath, apath = str(tmp_path / "cand"), str(tmp_path / "alias")
+    synth.candidate_dict(spark).write.parquet(cpath)
+    synth.alias_edges(spark).write.parquet(apath)
+
+    def build(name, *extra):
+        store = str(tmp_path / name)
+        rc = cli.main(["--store", store, "--build", tpath, *extra],
+                      spark=spark, out=io.StringIO())
+        assert rc == 0
+        terms = {
+            t for r in spark.read.parquet(f"{store}/ranges")
+            .select("subj", "obj").collect() for t in r
+        }
+        return os.listdir(store), terms
+
+    tables, terms = build("unlinked")
+    assert "statements" not in tables
+    assert any(t.startswith("E") for t in terms)
+    assert not any(t.startswith("Q") for t in terms)
+
+    tables, terms = build("linked", "--candidates", cpath, "--aliases", apath)
+    assert "statements" in tables
+    assert any(t.startswith("Q") for t in terms)

@@ -180,19 +180,28 @@ def serve(spark, store: str, fmt: str, max_rows: int, inp, out):
     return 0
 
 
-def build(spark, input_path: str, store: str, resume: bool, out):
+def build(spark, input_path: str, store: str, resume: bool, out,
+          candidates: str | None = None, aliases: str | None = None):
     """`--build`: the Main.java `-load` analog — run (or resume) the
     construction pipeline from a transcripts parquet into `store`
     (RocksTripleLoader.java:65-90; resume = the loader's idempotent
-    index build). Prints one stage-metrics JSON line."""
+    index build). Prints one stage-metrics JSON line.
+
+    `candidates` (mention, entity_id, prior) and `aliases` (src, dst)
+    are parquet paths of the linking dictionary and the alias edges.
+    A build without one of them does not link through it; without
+    both, `ranges` keeps the raw mention terms and no statement table
+    is written."""
     from .pipeline.materialize import run_pipeline
-    from . import synth
+
+    def read(path):
+        return None if path is None else spark.read.parquet(path)
 
     transcripts = spark.read.parquet(input_path)
     res = run_pipeline(
         spark, transcripts, store,
-        candidates=synth.candidate_dict(spark),
-        aliases=synth.alias_edges(spark),
+        candidates=read(candidates),
+        aliases=read(aliases),
         resume=resume,
         use_builtin_extractor=True,
     )
@@ -216,6 +225,11 @@ def main(argv=None, spark=None, out=None, inp=None):
                          "parquet — the reference's -load mode")
     ap.add_argument("--resume", action="store_true",
                     help="with --build: skip stages whose output exists")
+    ap.add_argument("--candidates", metavar="PARQUET",
+                    help="with --build: linking dictionary (mention, "
+                         "entity_id, prior)")
+    ap.add_argument("--aliases", metavar="PARQUET",
+                    help="with --build: alias edges (src, dst)")
     ap.add_argument("--format", choices=("tsv", "json", "ntriples"),
                     default="tsv")
     ap.add_argument("--max-rows", type=int, default=1000)
@@ -231,7 +245,8 @@ def main(argv=None, spark=None, out=None, inp=None):
         spark = get_spark("sparql-cli")
     try:
         if args.build:
-            return build(spark, args.build, args.store, args.resume, out)
+            return build(spark, args.build, args.store, args.resume, out,
+                         args.candidates, args.aliases)
         if args.serve:
             return serve(spark, args.store, args.format, args.max_rows,
                          inp or sys.stdin, out)

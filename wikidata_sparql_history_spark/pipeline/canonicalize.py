@@ -21,21 +21,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_relation
 from .linking import link_terms, resolve_dict
 
 MAX_ITERS = 50
 
 # alias tables at or below this row count resolve driver-side (one
 # bounded collect, pure-python validation and pointer chase, one
-# createDataFrame) instead of paying several serial Spark jobs; above
-# it, the distributed path-halving loop runs. The loop is the
-# general/scale path — the fast path only applies when the whole alias
-# dimension would have been broadcast anyway.
+# Arrow-built local relation) instead of paying several serial Spark
+# jobs; above it, the distributed path-halving loop runs. The loop is
+# the general/scale path — the fast path only applies when the whole
+# alias dimension would have been broadcast anyway.
 DRIVER_THRESHOLD = 100_000
 
 
 def _canonical_map_driver(spark, rows) -> DataFrame:
-    """Validate and resolve already-collected distinct (src, dst) rows."""
+    """Validate and resolve already-collected distinct (src, dst) rows.
+    The map comes back as a `session.local_relation` (LocalTableScan):
+    every plan that broadcasts it (the entity map, and each column
+    `link_terms` rewrites) reads it with no job and no Python worker,
+    where a pickled list re-ran a Python stage in each of them."""
     parent: dict[str, str] = {}
     for r in rows:
         if r["src"] in parent and parent[r["src"]] != r["dst"]:
@@ -57,7 +62,7 @@ def _canonical_map_driver(spark, rows) -> DataFrame:
             cur = parent[cur]
             hops += 1
         out.append((src, cur))
-    return spark.createDataFrame(out, "src string, canon string")
+    return local_relation(spark, ["src", "canon"], out, "string")
 
 
 # resolved maps cached per (session-token, analyzed-plan semanticHash):

@@ -283,18 +283,3 @@ def pagerank_sql_tail(iterations: int = 10, damping: float = 0.85) -> str:
         ", ".join(parts)
         + f" SELECT node, round(rank, 6) AS rank FROM pr_r{iterations}"
     )
-
-
-def closure_sql(edges_cte: str, seed_filter: str = "") -> str:
-    """DuckDB oracle twin: recursive CTE with UNION (set semantics —
-    terminates on cycles). `edges_cte` must define a relation named
-    ``edges(src, dst)``; `seed_filter` e.g. "WHERE src = 'Q0'"."""
-    return f"""
-WITH RECURSIVE {edges_cte},
-reach AS (
-  SELECT src, dst FROM edges {seed_filter}
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT DISTINCT src, dst FROM reach
-"""

@@ -203,11 +203,11 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Optional as Opt
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import LONG_MAX
+from ..session import local_relation
 from . import views
 
 
@@ -1303,14 +1303,8 @@ class _Ctx:
 
     def local_rows(self, names, rows, typ: str) -> DataFrame:
         """Constant `rows` as a relation with one `typ` column per
-        name. Built from a pandas frame, so the session's Arrow path
-        plans it as a LocalTableScan: no job, no Python worker (a
-        Python list goes through a pickled RDD and runs a job per
-        call). dtype=object keeps a None cell NULL on a long column."""
-        return self.spark.createDataFrame(
-            pd.DataFrame(list(rows), columns=list(names), dtype=object),
-            ", ".join(f"{n} {typ}" for n in names),
-        )
+        name (`session.local_relation`: a LocalTableScan, no job)."""
+        return local_relation(self.spark, names, rows, typ)
 
     def source(self, graph):
         """(subj, pred, obj) relation for the active graph context;

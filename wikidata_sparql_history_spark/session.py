@@ -4,13 +4,18 @@ Designed for a multi-executor cluster at 100 TB; tested on local[N].
 All knobs are env-overridable so bench.py can run the identical job at
 two parallelism levels (local[8] vs local[32]) for the scaling-
 efficiency measurement.
+
+`local_relation` builds every driver-side relation a session needs
+(the canonical alias map, SPARQL seeds and VALUES) without a Python
+worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 
 MAX_DRIVER_MEM_MB = 48 * 1024
@@ -97,3 +102,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_ARROW_TYPES = {"string": pa.string(), "long": pa.int64()}
+
+
+def local_relation(spark: SparkSession, names, rows, typ: str) -> DataFrame:
+    """Driver-built `rows` as a relation with one `typ` column
+    ("string" or "long") per name. Every relation the package builds
+    from driver-side rows goes through here.
+
+    The rows go to Spark as a `pyarrow.Table`, which PySpark sends
+    through Arrow whatever `spark.sql.execution.arrow.pyspark.enabled`
+    says, so the relation plans as a LocalTableScan: no job, no Python
+    worker. A Python list, and a pandas frame when that conf is off
+    (a session built outside `get_spark`, e.g. by spark-submit) or the
+    frame is empty, go through a pickled RDD that plans as `Scan ExistingRDD` and runs a
+    Python-worker stage in every plan that reads it. An empty `rows`
+    and a None cell (NULL, also on a long column) keep the same path."""
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, _ARROW_TYPES[typ]) for c in cols], names=list(names)))

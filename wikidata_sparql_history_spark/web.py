@@ -34,7 +34,6 @@ store is immutable, so no coordination is needed.
 from __future__ import annotations
 
 import io
-import json
 from urllib.parse import parse_qs
 
 from . import cli
@@ -165,7 +164,3 @@ def make_app(spark, store: str, max_rows: int = 1000):
         return [payload]
 
     return app
-
-
-def _json_ok(body: bytes) -> dict:  # pragma: no cover - debug helper
-    return json.loads(body.decode())
