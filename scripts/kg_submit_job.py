@@ -11,12 +11,13 @@ Cluster launch (north rule):
         [--resume] [--n-synth 1000]
 
 On a real cluster the SparkSession comes from the submit config; this
-script only declares the job. `--candidates` / `--aliases` are the
-linking dictionary and the alias edges; without them the build is
-unlinked (raw mention terms, no statement tables). `--n-synth`
-synthesizes a deterministic corpus instead of reading --input, and
-links it against the synthetic dictionaries unless those paths are
-given (sandbox smoke mode).
+script only declares the job. It always builds with the builtin
+(JVM-only) extractor, as `cli --build` does. `--candidates` /
+`--aliases` are the linking dictionary and the alias edges; without
+them the build is unlinked (raw mention terms, no statement tables).
+`--n-synth` synthesizes a deterministic corpus instead of reading
+--input, and links it against the synthetic dictionaries unless those
+paths are given (smoke mode).
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ def main() -> int:
                     help="synthesize N conversations instead of --input")
     ap.add_argument("--resume", action="store_true",
                     help="skip stages whose output tables already exist")
-    ap.add_argument("--builtin-extractor", action="store_true")
     ap.add_argument("--candidates", help="linking dictionary parquet "
                     "(mention, entity_id, prior)")
     ap.add_argument("--aliases", help="alias edges parquet (src, dst)")
@@ -68,7 +68,7 @@ def main() -> int:
         candidates=dictionary(args.candidates, synth.candidate_dict),
         aliases=dictionary(args.aliases, synth.alias_edges),
         resume=args.resume,
-        use_builtin_extractor=args.builtin_extractor,
+        use_builtin_extractor=True,
     )
     print(json.dumps({
         "stages_run": res.stages_run,

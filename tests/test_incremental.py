@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from wikidata_sparql_history_spark import LONG_MAX
 from wikidata_sparql_history_spark.streaming.incremental import (
-    close_open_ranges,
+    close_open_ranges_at,
     merge_range_arrays,
     merge_ranges,
     stream_extract,
@@ -45,7 +45,8 @@ def test_merge_ranges_reopens_live_triple(spark):
     )
     # new batch observed the fact continuing from rev 30
     new = spark.createDataFrame([("c1", "Q1", "P1", "Q2", [(30, LONG_MAX)])], schema)
-    closed = close_open_ranges(existing, 30)
+    boundaries = spark.createDataFrame([("c1", 30)], "conv_id string, at_rev long")
+    closed = close_open_ranges_at(existing, boundaries)
     merged = merge_ranges(closed, new).collect()
     assert len(merged) == 1
     assert [(r.start, r.end) for r in merged[0].ranges] == [(2, LONG_MAX)]

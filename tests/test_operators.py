@@ -314,14 +314,6 @@ def test_multimodal_feature_plumbing(spark):
     assert all(again[r.media_id] == r.digest for r in rows)
 
 
-def test_frame_sample_plan(spark):
-    media = multimodal.media_from_documents(docs(spark).limit(30))
-    plan = multimodal.frame_sample_plan(media, every_ms=1000)
-    joined = plan.join(media.select("media_id", "meta"), "media_id")
-    bad = joined.filter(F.col("offset_ms") > F.col("meta.duration_ms") + 1000)
-    assert bad.isEmpty()
-
-
 def test_repetition_stats_planted(spark):
     """Gopher-style repetition signals on planted texts: a degenerate
     repeat → fractions 1.0; an all-distinct text → 0.0."""

@@ -297,43 +297,3 @@ def test_snapshot_filter_pushdown_and_pruning(spark, tmp_path):
     # filter columns
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "conv_id" in read_schema and "range_start" in read_schema
-
-
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
-    """Bucketed catalog tables co-locate join keys ON DISK: a join of
-    two tables bucketed on conv_id must run with ZERO shuffle exchanges
-    — the 100-TB layout where the fact table is bucketed once and every
-    downstream join/agg reuses it (catalog.write_bucketed docstring)."""
-    from wikidata_sparql_history_spark.sources.catalog import write_bucketed
-
-    t = synth.transcripts(spark, 20, shuffled=False)
-    facts = __import__(
-        "wikidata_sparql_history_spark.pipeline.extract",
-        fromlist=["extract_triples_builtin"],
-    ).extract_triples_builtin(t)
-    write_bucketed(
-        t.select("conv_id", "turn_idx", "role"),
-        "bkt_turns", ["conv_id"], 4, sort_by=["conv_id"],
-    )
-    write_bucketed(facts, "bkt_facts", ["conv_id"], 4, sort_by=["conv_id"])
-    # at test scale the planner would just broadcast the tiny side
-    # ("Bucketed: false (disabled by query planner)"); disable broadcast
-    # to exercise the layout the fact-table join takes at 100 TB, where
-    # neither side fits in memory
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table("bkt_turns")
-        b = spark.table("bkt_facts")
-        joined = a.join(b, "conv_id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan[:3000]
-        assert "Bucketed: true" in plan, plan[:3000]
-        # and the aggregation keyed on the bucket column reuses it too
-        agg = b.groupBy("conv_id").count()
-        agg_plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in agg_plan, agg_plan[:3000]
-        assert joined.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_turns")
-        spark.sql("DROP TABLE IF EXISTS bkt_facts")

@@ -1,4 +1,4 @@
-"""Scalar term functions (SURVEY.md §2.7 F2-F8, §2.2 P8).
+"""Scalar term functions (SURVEY.md §2.7 F2-F6 and F8, §2.2 P8).
 
 Column-expression builders only — every function returns a Spark
 Column built from JVM built-ins (whole-stage codegen; no UDFs).
@@ -159,14 +159,6 @@ def canonical_decimal(col) -> Column:
     s = F.regexp_replace(s, r"(\.\d*?)0+$", "$1")
     s = F.regexp_replace(s, r"\.$", "")
     return F.when(c >= 0, F.concat(F.lit("+"), s)).otherwise(s)
-
-
-# --- F7: content hash for value/reference nodes (WikibaseValueHasher) -------
-
-def content_hash(*cols) -> Column:
-    """sha1 over canonicalized '|'-joined fields — stable node ids for
-    reference/value nodes (WikibaseValueHasher.java:13-189 analog)."""
-    return F.sha1(F.concat_ws("|", *cols))
 
 
 # --- F8: language-code normalization (RdfBuilder.java:545-551) ---------------

@@ -12,9 +12,10 @@ The Spark mapping:
 - ``compose(id, tag)`` / ``tag_of`` / ``id_of`` — the same ``*12+tag``
   arithmetic as pure JVM column expressions (exact for the full int64
   range: decompose uses pmod + decimal division, no float rounding).
-- inline encoders for integers (identity id), decimals (scaled 1e4
-  fixed-point, the reference's "small decimal" trick) and datetimes
-  (epoch seconds), each with its decode twin.
+- inline encoders for integers (identity id) and decimals (scaled 1e4
+  fixed-point, the reference's "small decimal" trick), each with its
+  decode twin, and datetimes (epoch seconds; ``id_of`` reads them
+  back).
 - non-inlinable terms (strings, IRIs) take a dictionary id from
   plans/encoding.build_dictionary and carry tag STRING/IRI.
 - lang-tagged strings are a ``struct<text,lang>`` column
@@ -130,10 +131,6 @@ def encode_datetime(ts) -> Column:
     return compose(F.unix_timestamp(_c(ts)), TAG_DATETIME)
 
 
-def decode_datetime(encoded) -> Column:
-    return F.timestamp_seconds(id_of(encoded))
-
-
 # xsd:dateTime lexicals the inline encoding can represent: years
 # 0001..9999, no leap seconds (the reference keeps the string form for
 # anything else, NumericValueFactory.java:353-371; SURVEY §1.2 tag 7)
@@ -162,14 +159,6 @@ def encode_datetime_lexical(lex) -> Column:
         F.when(ok, compose(epoch, TAG_DATETIME)).alias("encoded"),
         F.when(~ok, lex).alias("fallback"),
     )
-
-
-def encode_boolean(v) -> Column:
-    return compose(_c(v).cast("long"), TAG_BOOLEAN)
-
-
-def decode_boolean(encoded) -> Column:
-    return id_of(encoded) == 1
 
 
 # --- struct-typed literal columns ------------------------------------------

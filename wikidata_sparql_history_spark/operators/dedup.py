@@ -11,7 +11,7 @@ Scale notes (100 TB):
   buckets join candidates only — no all-pairs blowup. Hash = md5 of
   (seed || shingle) so the DuckDB oracle reproduces it exactly.
 - SimHash: 64-bit xxhash64 bitwise majority vote per document;
-  near-dups = equal 16-bit bands (hamming prefilter).
+  near-dups are fingerprints a small hamming distance apart.
 - embedding near-dup: cosine ≥ threshold via `similarity.py`.
 
 All built-in expressions — no Python UDFs anywhere.
@@ -299,38 +299,6 @@ def simhash(docs: DataFrame, bits: int = 64, n: int = 3) -> DataFrame:
     return agg.select("doc_id", out.alias("simhash"))
 
 
-def simhash_band_pairs(docs: DataFrame, band_bits: int = 16) -> DataFrame:
-    """Near-dup candidates: equal `band_bits`-bit band of simhash
-    (standard hamming-distance prefilter)."""
-    s = simhash(docs)
-    bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    band_cols = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned("simhash", i * band_bits).bitwiseAND(
-                F.lit(mask)
-            ).alias("key"),
-        )
-        for i in range(bands)
-    ]
-    banded = s.select("doc_id", F.explode(F.array(*band_cols)).alias("bk")).select(
-        "doc_id", "bk.band", "bk.key"
-    )
-    # r7: same single-pass materialization as minhash_lsh_pairs — the
-    # 64-aggregate simhash pipeline must not be computed once per join
-    # side (guide §3.3).
-    banded = banded.localCheckpoint()
-    a = banded.selectExpr("doc_id as id1", "band", "key")
-    b = banded.selectExpr("doc_id as id2", "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .distinct()
-    )
-
-
 def _edit_blocks(docs: DataFrame, prefix_len: int) -> DataFrame:
     """(doc_id, text, blk) with degenerate blocks removed: rows whose
     normalized text is EMPTY or whitespace-only (all punctuation)
@@ -346,7 +314,8 @@ def _edit_blocks(docs: DataFrame, prefix_len: int) -> DataFrame:
 def edit_distance_hot_blocks(
     docs: DataFrame, prefix_len: int = 40, max_block_size: int = 1000
 ) -> DataFrame:
-    """(blk, count) for the prefix blocks edit_distance_pairs DROPS.
+    """(blk, count) for the prefix blocks edit_distance_pairs DROPS
+    (it anti-joins exactly this set).
 
     Per the no-silent-caps rule: run this alongside
     edit_distance_pairs and log/route its rows — each dropped block
@@ -391,11 +360,7 @@ def edit_distance_pairs(
     MinHash)."""
     base = _edit_blocks(docs, prefix_len)
     if max_block_size is not None:
-        hot = (
-            base.groupBy("blk")
-            .count()
-            .filter(F.col("count") > max_block_size)
-        )
+        hot = edit_distance_hot_blocks(docs, prefix_len, max_block_size)
         base = base.join(F.broadcast(hot.select("blk")), "blk", "left_anti")
     a = base.selectExpr("doc_id AS id1", "text AS t1", "blk")
     b = base.selectExpr("doc_id AS id2", "text AS t2", "blk")

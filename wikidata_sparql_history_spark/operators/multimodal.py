@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata.
 
-The container has no image/audio codecs, so the decode step is a
-clearly-marked deterministic fake (or NotImplementedError for real
-decoding) — but the Spark-side plumbing is real and tested: schema,
-Arrow batch shape through `mapInPandas`, partition-size control for
-large blobs, and the metadata struct convention.
+No image/audio codec is a dependency, so the decode step is a
+clearly-marked deterministic fake — but the Spark-side plumbing is
+real and tested: schema, Arrow batch shape through `mapInPandas`,
+partition-size control for large blobs, and the metadata struct
+convention.
 
 Conventions (what a production pipeline needs at 100 TB):
 - blobs live in their own column `content: binary`; metadata is a
@@ -27,11 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, kind string, content binary, "
-    "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, digest string, "
@@ -58,14 +53,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
             F.lit(16000).cast("int").alias("sample_rate"),
             (F.length("text") * 10).cast("int").alias("duration_ms"),
         ).alias("meta"),
-    )
-
-
-def decode_image(blob: bytes) -> "np.ndarray":
-    """Real decode would use PIL/cv2 — unavailable in this container."""
-    raise NotImplementedError(
-        "image decoding requires PIL/opencv; use fake_features for the "
-        "deterministic test path"
     )
 
 
@@ -100,19 +87,4 @@ def extract_features(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "kind", "content").mapInPandas(
         run, schema=FEATURE_SCHEMA
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per frame to decode
-    (media_id, frame_idx, offset_ms) — pure built-ins; the decode
-    itself is the stubbed step. Demonstrates explode-based fan-out
-    sized by metadata without touching the blob column."""
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / every_ms).cast("int"), F.lit(1)
-    )
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.posexplode(F.transform(F.sequence(F.lit(1), n_frames), lambda i: i * every_ms)
-                     ).alias("frame_idx", "offset_ms"),
     )

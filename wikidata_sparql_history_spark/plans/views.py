@@ -1,14 +1,14 @@
-"""Temporal snapshot + metadata views (SURVEY.md §2.2 P5/P6, §2.3
-J2-J5, §2.5 W3/W4).
+"""Temporal snapshot views over the `ranges` table (SURVEY.md §2.2
+P5/P6, §2.3 J5, §2.5 W4).
 
 The reference exposes history through named graphs
 (rev:global/r, rev:additions/r, rev:deletions/r —
-RocksTripleSource.java:107-139) and 11 magic predicates. Here each is
-a cheap declarative view over two tables:
-
-- `ranges`  : one row per coalesced validity range
-              (conv_id, subj, pred, obj, range_start, range_end, ...)
-- `turns`   : ordered turn metadata from `ordering.ordered_turns`
+RocksTripleSource.java:107-139). Here each is a cheap declarative view
+over `ranges`, one row per coalesced validity range
+(conv_id, subj, pred, obj, range_start, range_end, ...). The
+revision-metadata magic predicates are compiled in `sparql.py` /
+`sql_surface.py` over `turns`; `global_state_at_ts` is the as-of
+lookup over that table.
 
 All predicates are plain column comparisons → Catalyst pushes them to
 the parquet scan (min/max pruning on range_start/range_end when the
@@ -23,8 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .. import LONG_MAX
 
 
 # --- range-row form (primary) --------------------------------------------
@@ -68,71 +66,6 @@ def additions_at_arrays(triples: DataFrame, rev: int) -> DataFrame:
 def deletions_at_arrays(triples: DataFrame, rev: int) -> DataFrame:
     return triples.filter(F.exists("ranges", lambda r: r.end == rev)).select(
         "conv_id", "subj", "pred", "obj"
-    )
-
-
-# --- delta indexes (A5 analogs, derived not stored) ------------------------
-
-def additions_index(ranges: DataFrame) -> DataFrame:
-    """revision → sorted list of added triples
-    (statement_inserted column family analog, RocksStore.java:153-159)."""
-    return ranges.groupBy("conv_id", F.col("range_start").alias("turn_idx")).agg(
-        F.sort_array(F.collect_list(F.struct("subj", "pred", "obj"))).alias("added")
-    )
-
-
-def deletions_index(ranges: DataFrame) -> DataFrame:
-    return (
-        ranges.filter(F.col("range_end") != LONG_MAX)
-        .groupBy("conv_id", F.col("range_end").alias("turn_idx"))
-        .agg(
-            F.sort_array(F.collect_list(F.struct("subj", "pred", "obj"))).alias(
-                "deleted"
-            )
-        )
-    )
-
-
-# --- magic-predicate metadata views (J2-J5, W3-W4) -------------------------
-
-def revision_about(turns: DataFrame) -> DataFrame:
-    """schema:about — turn → conversation (RocksTripleSource.java:583-649)."""
-    return turns.select("conv_id", "turn_idx")
-
-
-def revision_author(turns: DataFrame) -> DataFrame:
-    """hist:author analog — turn → role (contributor)."""
-    return turns.select("conv_id", "turn_idx", F.col("role").alias("author"))
-
-
-def revision_date(turns: DataFrame) -> DataFrame:
-    """schema:dateCreated analog."""
-    return turns.select("conv_id", "turn_idx", "ts")
-
-
-def parent_revision(turns: DataFrame) -> DataFrame:
-    """schema:isBasedOn — parent pointer via ordering lag (J3)."""
-    return turns.filter(F.col("parent_turn_idx").isNotNull()).select(
-        "conv_id", "turn_idx", "parent_turn_idx"
-    )
-
-
-def next_previous_revision(turns: DataFrame) -> DataFrame:
-    """hist:nextRevision / hist:previousRevision (W3): dense adjacency."""
-    return turns.select(
-        "conv_id",
-        "turn_idx",
-        F.col("parent_turn_idx").alias("previous_turn_idx"),
-        F.when(F.col("next_turn_idx") == LONG_MAX, None)
-        .otherwise(F.col("next_turn_idx"))
-        .alias("next_turn_idx"),
-    )
-
-
-def author_revisions(turns: DataFrame) -> DataFrame:
-    """contributor → sorted revision list (J4 / A4)."""
-    return turns.groupBy("conv_id", "role").agg(
-        F.sort_array(F.collect_list("turn_idx")).alias("turn_idxs")
     )
 
 

@@ -41,29 +41,3 @@ def write_table(
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_by: list[str] | None = None,
-) -> None:
-    """Bucketed catalog table (S7 at scale): pre-hash-partitioned ON
-    DISK, so joins/aggregations keyed on the bucket columns read both
-    sides co-located and need NO shuffle at query time — the Spark
-    analog of the reference's sorted RocksDB key layout making its
-    merge joins index-order (RocksStore.java:224-245). At 100 TB this
-    is the difference between an exabyte of shuffle over the fact
-    table's lifetime and none: bucket once on conv_id (or subj), every
-    later stage reuses the layout. Iceberg's `bucket(N, col)` partition
-    transform is the production spelling of the same contract.
-
-    (saveAsTable because bucket metadata lives in the session catalog —
-    plain parquet paths can't carry it.)
-    """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.format("parquet").saveAsTable(table)

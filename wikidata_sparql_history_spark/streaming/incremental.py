@@ -80,12 +80,12 @@ def merge_ranges(existing: DataFrame, new_ranges: DataFrame) -> DataFrame:
 
 
 def close_open_ranges_at(existing: DataFrame, boundaries: DataFrame) -> DataFrame:
-    """Per-conversation variant of `close_open_ranges` for day-2
-    incremental ingest: close each conversation's still-open ranges at
-    THAT conversation's first newly-ingested turn (`boundaries` =
-    (conv_id, at_rev)). Conversations absent from `boundaries` (no new
-    turns) keep their open ranges — closing them would diverge from a
-    from-scratch build. One broadcast-sized join; no shuffle of the
+    """Close still-live ranges (end = LONG_MAX) for day-2 incremental
+    ingest: each conversation's open ranges end at THAT conversation's
+    first newly-ingested turn (`boundaries` = (conv_id, at_rev)).
+    Conversations absent from `boundaries` (no new turns) keep their
+    open ranges — closing them would diverge from a from-scratch
+    build. One broadcast-sized join; no shuffle of the
     triples table beyond its existing (conv_id, ...) grouping.
 
     A boundary at or below an open range's start would produce an
@@ -126,23 +126,6 @@ def close_open_ranges_at(existing: DataFrame, boundaries: DataFrame) -> DataFram
             ),
         )
         .drop("_at")
-    )
-
-
-def close_open_ranges(existing: DataFrame, at_rev) -> DataFrame:
-    """Close still-live ranges at a revision (used before merging a
-    re-ingest where the fact disappeared): end = LONG_MAX → at_rev."""
-    return existing.withColumn(
-        "ranges",
-        F.transform(
-            "ranges",
-            lambda r: F.struct(
-                r["start"].alias("start"),
-                F.when(r["end"] == LONG_MAX, F.lit(at_rev).cast("long"))
-                .otherwise(r["end"])
-                .alias("end"),
-            ),
-        ),
     )
 
 
