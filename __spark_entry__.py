@@ -93,8 +93,13 @@ _DICT_CACHE: dict[tuple, DataFrame] = {}
 _REIFIED_CACHE: dict[tuple, DataFrame] = {}
 
 
+def _session_token(spark) -> tuple:
+    sc = spark.sparkContext
+    return (sc.applicationId, sc.startTime)
+
+
 def _session_key(spark, sf_dir):
-    return (*canonicalize.session_token(spark), sf_dir)
+    return (*_session_token(spark), sf_dir)
 
 
 def _evict_dead_sessions(cache: dict, spark) -> None:
@@ -103,7 +108,7 @@ def _evict_dead_sessions(cache: dict, spark) -> None:
     accumulate across session restarts within one driver process
     (round-3 advice). Called on every insert, so each cache holds only
     the live session's entries."""
-    token = canonicalize.session_token(spark)
+    token = _session_token(spark)
     for k in list(cache):
         if k[: len(token)] != token:
             df = cache.pop(k)
@@ -434,9 +439,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # --- statement reification layer (RdfBuilder.java:232-285) ---
     def _reified(spark, sf):
-        # four contract queries project this one table; persist per
+        # five contract queries project this one table; persist per
         # (session, sf) like the ranges cache — first caller pays the
-        # parse+link pass, the rest reuse the blocks
+        # parse+link pass, the rest reuse the blocks. Filled before any
+        # consumer is planned, as materialize.shared does: Spark reports
+        # the cached scan's hashpartitioning(conv_id) only once the
+        # cache is filled, so a consumer planned earlier re-shuffles it
         key = _session_key(spark, sf)
         cached = _REIFIED_CACHE.get(key)
         if cached is None:
@@ -446,6 +454,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 synth.candidate_dict(spark),
                 synth.alias_edges(spark),
             ).persist()
+            cached.count()
             _REIFIED_CACHE[key] = cached
         return cached
 

@@ -29,3 +29,24 @@ def test_queries_runnable_smoke(spark):
     for name, fn in qs.items():
         df = fn(spark, "/root/testdata/sf0.001")
         assert df.limit(1).count() >= 0, name
+
+
+def test_statement_queries_plan_over_filled_cache(spark):
+    """The four kg_statement_* queries project one persisted occurrence
+    table; it is filled before any of them is planned, so each reads
+    its hashpartitioning(conv_id) and plans no exchange outside
+    broadcasts."""
+    from tests.test_operators import SF
+    from tests.test_reify_golden import _fact_path_exchanges
+
+    for df in entry._REIFIED_CACHE.values():
+        df.unpersist()
+    entry._REIFIED_CACHE.clear()
+    qs = entry.queries()
+    for name in (
+        "kg_statements_reified", "kg_statement_qualifiers",
+        "kg_statement_references", "kg_statement_value_nodes",
+    ):
+        plan = qs[name](spark, SF)._jdf.queryExecution().executedPlan()
+        plan = plan.toString()
+        assert _fact_path_exchanges(plan) == [], (name, plan[:4000])

@@ -49,16 +49,14 @@ def test_store_build_plans_have_no_python_rdd(spark):
         assert "ExistingRDD" not in _plan(df)
 
 
-def test_canonical_map_is_local_with_arrow_conf_off(arrow_off, monkeypatch):
-    monkeypatch.setattr(canonicalize, "_MAP_CACHE", {})
+def test_canonical_map_is_local_with_arrow_conf_off(arrow_off):
     cmap = canonicalize.canonical_map(synth.alias_edges(arrow_off))
     _assert_local(cmap)
     got = {tuple(r) for r in cmap.collect()}
     assert ("Q45", "Q0") in got and len(got) == 30
 
 
-def test_empty_alias_table_gives_empty_local_map(spark, monkeypatch):
-    monkeypatch.setattr(canonicalize, "_MAP_CACHE", {})
+def test_empty_alias_table_gives_empty_local_map(spark):
     empty = spark.range(0).selectExpr("'a' AS src", "'b' AS dst")
     cmap = canonicalize.canonical_map(empty)
     assert cmap.schema.simpleString() == "struct<src:string,canon:string>"

@@ -55,12 +55,6 @@ def test_closure_materializes_once_per_round(spark, monkeypatch):
     assert len(calls) == 2 + 4
 
 
-def test_closure_max_hops(spark):
-    e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    got = {tuple(r) for r in paths.transitive_closure(e, max_hops=2).collect()}
-    assert got == {("a", "b"), ("a", "c"), ("b", "c"), ("b", "d"), ("c", "d")}
-
-
 def test_closure_self_loop(spark):
     e = _edges(spark, [("a", "a"), ("a", "b")])
     got = {tuple(r) for r in paths.transitive_closure(e).collect()}

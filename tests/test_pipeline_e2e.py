@@ -208,6 +208,32 @@ def test_statement_tables_equal_unshared_occurrences(spark, tmp_path):
         assert got_rows == sorted(tuple(r) for r in want.collect()), table
 
 
+def test_entity_map_built_once_per_build(spark, tmp_path, monkeypatch):
+    """One build links `ranges` and the statement occurrences through
+    one entity map; a resumed build that skips every stage builds
+    none. Both names a layer could call it by are counted."""
+    from wikidata_sparql_history_spark.pipeline import canonicalize, reify
+
+    calls = []
+    real = canonicalize.entity_map
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(canonicalize, "entity_map", counted)
+    monkeypatch.setattr(reify, "entity_map", counted)
+    t = synth.transcripts(spark, 10)
+    cand, ali = synth.candidate_dict(spark), synth.alias_edges(spark)
+    out = str(tmp_path / "kg")
+    assert run_pipeline(spark, t, out, cand, ali).stages_run == STAGES
+    assert len(calls) == 1
+    calls.clear()
+    resumed = run_pipeline(spark, t, out, cand, ali, resume=True)
+    assert resumed.stages_skipped == STAGES
+    assert calls == []
+
+
 def test_partition_lineage_describes_the_write(spark, tmp_path):
     """metrics.json lineage has one key per written part file (keyed by
     its part-NNNNN index) and its values sum to the table's rows."""

@@ -93,7 +93,6 @@ def _emit_json(rows, cols, out):
 # literal, and "lex@lang" serializes as a lang-tagged literal
 _IRI_SHAPE_RE = r"^[A-Za-z_][\w.\-]*(:[\w./\-]+)?$"
 _NUM_RE = r"^-?\d+(\.\d+)?$"
-_LANG_TAGGED_RE = r"^(.+)@([A-Za-z][A-Za-z0-9\-]*)$"
 
 
 def _nt_term(col):
@@ -104,8 +103,8 @@ def _nt_term(col):
     from .functions import rdf_terms as rt
 
     is_iri = F.col(col).rlike(_IRI_SHAPE_RE) & ~F.col(col).rlike(_NUM_RE)
-    lang_lex = F.regexp_extract(F.col(col), _LANG_TAGGED_RE, 1)
-    lang_tag = F.regexp_extract(F.col(col), _LANG_TAGGED_RE, 2)
+    lang_lex = F.regexp_extract(F.col(col), rt.LANG_TAGGED_RE, 1)
+    lang_tag = F.regexp_extract(F.col(col), rt.LANG_TAGGED_RE, 2)
     is_lang = (lang_lex != "") & ~is_iri
     return (
         F.when(is_iri, rt.nt_iri(F.col(col)))

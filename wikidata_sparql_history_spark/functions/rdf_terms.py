@@ -83,6 +83,13 @@ NT_TRIPLE_RE = r"^<([^>]*)> <([^>]*)> (.+?) \.\s*$"
 _NT_LITERAL_RE = r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z0-9-]+))?$'
 _NT_IRI_RE = r"^<([^>]*)>$"
 
+# the store's string form of a language-tagged literal, "lex@lang"
+# (sparql.string_form): LANG_TAGGED_RE's group 1 is the lexical form,
+# group 2 the tag; LANG_SUFFIX_RE matches the "@lang" suffix alone
+_LANG_TAG = r"[A-Za-z][A-Za-z0-9-]*"
+LANG_TAGGED_RE = rf"^(.+)@({_LANG_TAG})$"
+LANG_SUFFIX_RE = rf"@{_LANG_TAG}$"
+
 
 def _null_if_empty(c: Column) -> Column:
     return F.when(c == "", None).otherwise(c)

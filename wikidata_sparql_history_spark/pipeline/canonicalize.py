@@ -14,6 +14,9 @@ frontiers").
 For undirected connected components (hash-min over arbitrary graphs)
 see `connected_components` — the general loop used when alias edges
 aren't a forest.
+
+Nothing is cached across calls: a caller that needs one map in several
+plans builds it once and passes it along (`materialize.run_pipeline`).
 """
 
 from __future__ import annotations
@@ -65,39 +68,6 @@ def _canonical_map_driver(spark, rows) -> DataFrame:
     return local_relation(spark, ["src", "canon"], out, "string")
 
 
-# resolved maps cached per (session-token, analyzed-plan semanticHash):
-# every snapshot query re-evaluates the construction pipeline, and
-# without the cache each evaluation re-runs the collect/loop actions
-_MAP_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _evict_dead_sessions(token: tuple) -> None:
-    """Drop cached maps belonging to other (dead) session tokens so
-    restarts within one driver process don't accumulate references."""
-    for k in list(_MAP_CACHE):
-        if k[: len(token)] != token:
-            _MAP_CACHE.pop(k)
-
-
-def session_token(spark) -> tuple:
-    """Stable identity for a live session: applicationId + context start
-    time. id(session) is unsafe — CPython reuses ids after GC, so a new
-    session could silently inherit a dead session's cached DataFrames."""
-    try:
-        sc = spark.sparkContext
-        return (sc.applicationId, sc.startTime)
-    except Exception:  # Spark Connect — no sparkContext
-        return (id(spark),)
-
-
-def _cache_key(alias_edges: DataFrame) -> tuple | None:
-    try:
-        h = alias_edges._jdf.queryExecution().analyzed().semanticHash()
-        return (*session_token(alias_edges.sparkSession), int(h))
-    except Exception:  # Spark Connect or API drift — just skip caching
-        return None
-
-
 def canonical_map(
     alias_edges: DataFrame,
     driver_threshold: int = DRIVER_THRESHOLD,
@@ -114,14 +84,6 @@ def canonical_map(
     itself (dst→dst') and set dst := dst' where present. Each round
     doubles resolved path length.
     """
-    key = _cache_key(alias_edges)
-    if key is not None:
-        # the threshold changes WHICH implementation runs — a cached
-        # driver-path map must not satisfy a forced-loop request
-        key = (*key, driver_threshold)
-        if key in _MAP_CACHE:
-            return _MAP_CACHE[key]
-        _evict_dead_sessions(session_token(alias_edges.sparkSession))
     # exact duplicate (src, dst) rows are functionally valid — only a
     # src with two DIFFERENT dsts violates the forest precondition, so
     # the gate compares distinct edges against distinct srcs
@@ -131,10 +93,7 @@ def canonical_map(
         # rows reach the driver, and a small table is resolved from them
         rows = edges.limit(driver_threshold + 1).collect()
         if len(rows) <= driver_threshold:
-            result = _canonical_map_driver(alias_edges.sparkSession, rows)
-            if key is not None:
-                _MAP_CACHE[key] = result
-            return result
+            return _canonical_map_driver(alias_edges.sparkSession, rows)
     n, n_src = edges.agg(F.count("*"), F.countDistinct("src")).first()
     if n != n_src:
         raise ValueError(
@@ -171,10 +130,7 @@ def canonical_map(
             "rounds — alias edges likely contain a cycle; route through "
             "connected_components() for general graphs"
         )
-    result = m.withColumnRenamed("dst", "canon")
-    if key is not None:
-        _MAP_CACHE[key] = result
-    return result
+    return m.withColumnRenamed("dst", "canon")
 
 
 def connected_components(edges: DataFrame) -> DataFrame:
@@ -245,9 +201,8 @@ def entity_map(
     mention maps to canon(src). With one input None the map is the
     other step alone (at least one must be given). `link_terms` passes
     misses through, so one rewrite through this map equals linking,
-    then canonicalizing. Both the triples layer (construct_ranges) and
-    the statement layer (reify_statements) resolve their terms
-    through it."""
+    then canonicalizing. A store build passes one map to the triples
+    layer (construct.ranges_plan) and the statement layer."""
     if alias_edges is not None:
         cmap = canonical_map(alias_edges).toDF("term", "entity")
         if candidates is None:

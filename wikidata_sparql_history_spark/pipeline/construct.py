@@ -1,12 +1,13 @@
 """Fused construction plan — the store build's `ranges` and the
 minimal-shuffle scale path.
 
-`construct_ranges` composes the stage modules into one plan, as the
+`ranges_plan` composes the stage modules into one plan, as the
 reference builds a page's revision ranges in one pass
 (RevisionFileConverter.java:128-164): ordering.turn_window →
-extract.extract_facts → linking.link_terms over
-canonicalize.entity_map (link, then canonicalize, as one broadcast
-join per column) → per-turn dedup → coalesce.islands. Chaining the
+extract.extract_facts → linking.link_terms over an entity map (link,
+then canonicalize, as one broadcast join per column) → per-turn dedup
+→ coalesce.islands. `construct_ranges` first builds the map
+(canonicalize.entity_map); the store build passes its own. Chaining the
 stages as separate tables shuffles the full fact stream at each
 boundary; composed, the plan has at most TWO wide exchanges:
 
@@ -59,6 +60,17 @@ def construct_ranges(
     exchange instead of two). Output identical
     (tests/test_construct_fused.py).
     """
+    linked = candidates is not None or aliases is not None
+    emap = canonicalize.entity_map(candidates, aliases) if linked else None
+    return ranges_plan(spark, transcripts, emap, use_builtin_extractor)
+
+
+def ranges_plan(
+    spark: SparkSession, transcripts: DataFrame, emap: DataFrame | None,
+    use_builtin_extractor: bool = False,
+) -> DataFrame:
+    """`construct_ranges` over a built (term, entity) map, or raw terms
+    when `emap` is None."""
     # exchange 1: conv_id clustering for the turn window. The window's
     # ClusteredDistribution makes EnsureRequirements insert the
     # hash(conv_id) exchange at spark.sql.shuffle.partitions — and SKIP
@@ -80,8 +92,7 @@ def construct_ranges(
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         facts = facts.repartition(n, "conv_id")
 
-    if candidates is not None or aliases is not None:
-        emap = canonicalize.entity_map(candidates, aliases)
+    if emap is not None:
         facts = linking.link_terms(facts, emap, ("subj", "obj"))
 
     # per-turn dedup (linking/canonicalization can merge two mentions

@@ -19,14 +19,18 @@ Stages (each an idempotent table write; resume skips completed ones):
      the reification layer (pipeline/reify.py; only when candidates
      AND aliases are provided, since its terms are linked)
 
+The input's six columns are checked first (`check_input`).
+
 Each piece of work runs once per build:
 
+- the entity map (`canonicalize.entity_map`) is built on first use and
+  feeds both the `ranges` plan and the statement occurrences;
 - the input is shuffled ONCE, `repartition(shuffle.partitions,
   conv_id)`, and persisted (MEMORY_AND_DISK). `turns`, `ranges` and the
   statement occurrences read the cached scan, which keeps
   hashpartitioning(conv_id), so their conv_id windows and aggregates
   add no exchange over the input;
-- the statement occurrences (`reify.reify_statements`: segment parse,
+- the statement occurrences (`reify.statement_occurrences`: segment parse,
   entity-map linking, stmt_id hashing) are persisted once
   (MEMORY_AND_DISK) and feed all three statement tables, which add no
   shuffle of their own on that clustering.
@@ -63,7 +67,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import catalog
-from . import coalesce, construct, ordering
+from . import canonicalize, coalesce, construct, ordering
+
+# the input contract (BASELINE.json input_hint): column → accepted
+# types; parquet may read `ts` back as TIMESTAMP_NTZ
+_STR = ("string",)
+INPUT_TYPES = {"conv_id": _STR, "turn_idx": ("int",), "role": _STR,
+               "text": _STR, "tool": _STR, "ts": ("timestamp", "timestamp_ntz")}
 
 
 @dataclass
@@ -87,6 +97,7 @@ def run_pipeline(
     use_builtin_extractor: bool = False,
 ) -> PipelineResult:
     """Run (or resume) the full construction pipeline."""
+    check_input(transcripts)
     res = PipelineResult(out_dir=out_dir)
     os.makedirs(out_dir, exist_ok=True)
 
@@ -123,6 +134,14 @@ def run_pipeline(
 
         return get
 
+    # the build's one entity map, built on first use: a resumed build
+    # that skips `ranges` and the statement stages builds none
+    @functools.cache
+    def entity_map() -> DataFrame | None:
+        if candidates is None and aliases is None:
+            return None
+        return canonicalize.entity_map(candidates, aliases)
+
     # ONE conv_id shuffle of the input: the turn window, the fused
     # ranges plan and the statement occurrences all group by conv_id,
     # and the cached scan keeps hashpartitioning(conv_id), so none of
@@ -142,8 +161,8 @@ def run_pipeline(
         ts_type = transcripts.schema["ts"].dataType
         ranges = stage(
             "ranges",
-            lambda: construct.construct_ranges(
-                spark, bucketed(), candidates, aliases,
+            lambda: construct.ranges_plan(
+                spark, bucketed(), entity_map(),
                 use_builtin_extractor=use_builtin_extractor,
             ).withColumn("start_ts", F.col("start_ts").cast(ts_type)),
             sort_by=["subj", "pred", "obj"],
@@ -187,7 +206,7 @@ def run_pipeline(
             # one occurrence pass feeds all three statement tables; it
             # stays conv_id-clustered, so the family adds no shuffle
             occurrences = shared(
-                lambda: reify.reify_statements(bucketed(), candidates, aliases)
+                lambda: reify.statement_occurrences(bucketed(), entity_map())
             )
             stage(
                 "statements",
@@ -210,6 +229,18 @@ def run_pipeline(
 
     _write_metrics(res)
     return res
+
+
+def check_input(transcripts: DataFrame) -> None:
+    """Raise ValueError naming the first `INPUT_TYPES` column that is
+    missing or mistyped, before any job runs (a string `turn_idx` would
+    build, ordering '10' before '9')."""
+    got = {f.name: f.dataType.simpleString() for f in transcripts.schema}
+    for name, want in INPUT_TYPES.items():
+        if got.get(name) not in want:
+            raise ValueError(f"transcripts column {name!r} is "
+                             f"{got.get(name, 'missing')}, expected "
+                             f"{' or '.join(want)}")
 
 
 def _write_metrics(res: PipelineResult) -> None:

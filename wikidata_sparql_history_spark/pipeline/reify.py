@@ -25,8 +25,8 @@ ValueSnak, '?' = SomeValueSnak, '!' = NoValueSnak.)
 
 Value-side terms (subj / obj / qualifier object) resolve through
 `canonicalize.entity_map`, the same link-then-canonicalize map the
-triples layer (construct.construct_ranges) uses, so the two layers
-agree term-for-term by construction.
+triples layer (construct.ranges_plan) uses, so the two layers agree
+term-for-term by construction; a store build passes both one map.
 
 Everything is columnar (regexp_extract_all + posexplode + per-element
 regexp_extract inside whole-stage codegen). The family's distincts and
@@ -151,10 +151,16 @@ def reify_statements(
     """The linked statement-occurrence table: one row per parsed
     segment with stmt_id attached; feeds statement_nodes /
     statement_qualifiers / statement_references."""
-    segs = reified_segments(transcripts)
+    return statement_occurrences(
+        transcripts, entity_map(candidates, alias_edges)
+    )
+
+
+def statement_occurrences(transcripts: DataFrame, emap: DataFrame) -> DataFrame:
+    """`reify_statements` over a built (term, entity) map."""
     # '' (absent optional part) has no mapping and passes through
     segs = linking.link_terms(
-        segs, entity_map(candidates, alias_edges), ("subj", "obj", "qual_obj")
+        reified_segments(transcripts), emap, ("subj", "obj", "qual_obj")
     )
     return segs.withColumn(
         "stmt_id",

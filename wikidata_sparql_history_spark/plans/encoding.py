@@ -30,10 +30,7 @@ def _distinct_terms(triples: DataFrame) -> DataFrame:
     )
 
 
-def build_dictionary(
-    triples: DataFrame,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def build_dictionary(triples: DataFrame) -> DataFrame:
     """(term, id): every distinct subj/pred/obj, densely numbered 1..N
     in global term order.
 
@@ -50,15 +47,12 @@ def build_dictionary(
     Ids are independent of the sampled range boundaries — any ordered
     non-overlapping bucketing enumerates the sorted term sequence
     identically — so output matches the oracle's global dense_rank.
+    Buckets: spark.sql.shuffle.partitions.
     """
-    return _rank_terms(_distinct_terms(triples), num_partitions)
+    return _rank_terms(_distinct_terms(triples))
 
 
-def extend_dictionary(
-    existing: DataFrame,
-    triples: DataFrame,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def extend_dictionary(existing: DataFrame, triples: DataFrame) -> DataFrame:
     """Get-or-insert dictionary maintenance (the reference's day-2
     load semantics: RWStringStore assigns an id on FIRST encounter and
     never reassigns, RocksStore.java:403-453). Terms already present
@@ -74,19 +68,19 @@ def extend_dictionary(
         F.coalesce(F.max("id"), F.lit(0)).cast("long").alias("_base")
     )
     appended = (
-        _rank_terms(new_terms, num_partitions)
+        _rank_terms(new_terms)
         .crossJoin(F.broadcast(base))
         .select("term", (F.col("id") + F.col("_base")).alias("id"))
     )
     return existing.select("term", "id").unionByName(appended)
 
 
-def _rank_terms(terms: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def _rank_terms(terms: DataFrame) -> DataFrame:
     """The distributed global rank over a distinct (term) table —
     shared by build_dictionary (all terms) and extend_dictionary
     (new terms only)."""
     spark = terms.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = terms.repartitionByRange(n, "term").withColumn(
         "bucket", F.spark_partition_id()
     )

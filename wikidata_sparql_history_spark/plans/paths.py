@@ -27,13 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MAX_HOPS_DEFAULT = 64
+MAX_HOPS = 64
 
 
 def transitive_closure(
     edges: DataFrame,
     seeds: DataFrame | None = None,
-    max_hops: int | None = None,
 ) -> DataFrame:
     """All (src, dst) pairs connected by a directed path of ≥1 edge
     (SPARQL ``p+`` semantics; reflexive pairs appear only when a cycle
@@ -42,16 +41,14 @@ def transitive_closure(
     edges: (src, dst). seeds: optional one-column DataFrame (``src``)
     restricting origins — the bound-subject rewrite, applied as a
     semi-join of the edge table (duplicate seeds change nothing).
-    max_hops: optional depth cap (``p{1,n}``); None = unbounded
-    (cycle-safe regardless).
 
     Materializations: the distinct edge table once, the seeded first
     frontier once, then one block per round (that round's new pairs).
     `reached` is the union of the frontier and the round blocks; they
     are pairwise disjoint because each round anti-joins everything
-    reached before it, so the union needs no distinct. The loop stops
-    at the hop limit (MAX_HOPS_DEFAULT unless max_hops is given), so
-    the union has at most that many scans.
+    reached before it, so the union needs no distinct. A closure still
+    growing after MAX_HOPS rounds raises, so the union has at most that
+    many scans.
     """
     # r7: materialize the deduped edge table ONCE. Every BFS round
     # joins against `e`; without the checkpoint each round re-evaluated
@@ -66,9 +63,7 @@ def transitive_closure(
     else:
         frontier = e  # already materialized above — no second copy
     reached = frontier
-    hops = 1
-    limit = max_hops if max_hops is not None else MAX_HOPS_DEFAULT
-    while hops < limit:
+    for _ in range(1, MAX_HOPS):
         step = e.selectExpr("src AS _mid", "dst AS _nxt")
         nxt = (
             frontier.join(step, frontier["dst"] == step["_mid"])
@@ -80,14 +75,10 @@ def transitive_closure(
             return reached
         reached = reached.unionByName(fresh)
         frontier = fresh
-        hops += 1
-    if max_hops is None:
-        raise RuntimeError(
-            f"transitive_closure still growing after {limit} hops — "
-            "raise max_hops if the graph genuinely has longer shortest "
-            "paths"
-        )
-    return reached
+    raise RuntimeError(
+        f"transitive_closure still growing after {MAX_HOPS} hops — raise "
+        "MAX_HOPS if the graph genuinely has longer shortest paths"
+    )
 
 
 # --- path algebra (the remaining PropertyPathOptimizer rewrites:

@@ -207,6 +207,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import LONG_MAX
+from ..functions.rdf_terms import LANG_SUFFIX_RE, LANG_TAGGED_RE
 from ..session import local_relation
 from . import views
 
@@ -1617,8 +1618,7 @@ def _filter_col(fe, bound: set, ctx: _Ctx, name=_default_name) -> F.Column:
         if ctx.encode_const is not None:
             raise SparqlError(
                 "langMatches() is unsupported on the encoded surface")
-        tag = F.lower(F.regexp_extract(
-            col, r"^(.+)@([A-Za-z][A-Za-z0-9-]*)$", 2))
+        tag = F.lower(F.regexp_extract(col, LANG_TAGGED_RE, 2))
         rng = fe.term.lexical.lower()
         if rng == "*":
             return tag != ""
@@ -1631,11 +1631,10 @@ def _filter_col(fe, bound: set, ctx: _Ctx, name=_default_name) -> F.Column:
         if ctx.encode_const is not None:
             raise SparqlError(
                 f"{fe.fn.upper()}() is unsupported on the encoded surface")
-        lang_re = r"^(.+)@([A-Za-z][A-Za-z0-9-]*)$"
         if fe.fn == "lang":
-            col = F.regexp_extract(col, lang_re, 2)
+            col = F.regexp_extract(col, LANG_TAGGED_RE, 2)
         else:
-            col = F.regexp_replace(col, r"@[A-Za-z][A-Za-z0-9-]*$", "")
+            col = F.regexp_replace(col, LANG_SUFFIX_RE, "")
         rhs = F.lit(string_form(fe.term))
         return col == rhs if fe.op == "=" else col != rhs
     if fe.op in ("in", "not_in"):
