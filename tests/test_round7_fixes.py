@@ -10,7 +10,8 @@ import threading
 import pytest
 
 from wikidata_sparql_history_spark import web
-from wikidata_sparql_history_spark.plans import sparql
+from wikidata_sparql_history_spark.plans import sparql, views
+from wikidata_sparql_history_spark.session import release_checkpoint
 from tests.test_sparql import graph, rows
 
 
@@ -74,6 +75,10 @@ def test_web_lazy_init_loads_store_once_under_concurrency(spark, tmp_path, monke
         return g, None
 
     monkeypatch.setattr(cli, "_load", counting_load)
+    built = []
+    real_index = views.triple_index
+    monkeypatch.setattr(
+        views, "triple_index", lambda r: built.append(real_index(r)) or built[-1])
     app = web.make_app(spark, str(tmp_path), max_rows=10)
 
     results = []
@@ -91,3 +96,5 @@ def test_web_lazy_init_loads_store_once_under_concurrency(spark, tmp_path, monke
     assert len(calls) == 1, f"store loaded {len(calls)} times"
     assert all(s.startswith("200") for s in results)
     assert real_load is not cli._load  # monkeypatched for this test only
+    assert len(built) == 1
+    release_checkpoint(built[0])   # the app keeps it for its lifetime

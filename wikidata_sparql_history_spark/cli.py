@@ -156,26 +156,32 @@ def serve(spark, store: str, fmt: str, max_rows: int, inp, out):
     one-shot path pays per invocation. Results print in `fmt`
     followed by one blank separator line; a query error prints one
     `!error: ...` line instead of killing the session (the endpoint
-    returns 400 and keeps serving). EOF or the line `exit` stops."""
+    returns 400 and keeps serving). EOF or the line `exit` stops.
+    Queries read the store's triple index (`views.triple_index`)."""
     from .plans import sparql as sparql_mod
+    from .plans import views
+    from .session import release_checkpoint
 
     ranges, turns = _load(spark, store)
-    triples = ranges.select("subj", "pred", "obj")
-    for line in inp:
-        query = line.strip()
-        if not query:
-            continue
-        if query == "exit":
-            break
-        try:
-            df = sparql_mod.evaluate(
-                triples, query, ranges=ranges, turns=turns
-            )
-            _emit(df, fmt, max_rows, out)
-        except (sparql_mod.SparqlError, SystemExit) as e:
-            out.write(f"!error: {e}\n")
-        out.write("\n")
-        out.flush()
+    index = views.triple_index(ranges)
+    try:
+        for line in inp:
+            query = line.strip()
+            if not query:
+                continue
+            if query == "exit":
+                break
+            try:
+                df = sparql_mod.evaluate(
+                    None, query, ranges=ranges, turns=turns, index=index
+                )
+                _emit(df, fmt, max_rows, out)
+            except (sparql_mod.SparqlError, SystemExit) as e:
+                out.write(f"!error: {e}\n")
+            out.write("\n")
+            out.flush()
+    finally:
+        release_checkpoint(index)
     return 0
 
 

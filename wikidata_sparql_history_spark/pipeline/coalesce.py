@@ -110,12 +110,15 @@ def coalesce_ranges_pandas(facts: DataFrame, turns: DataFrame) -> DataFrame:
     return present.groupBy("conv_id").applyInPandas(run, schema=schema)
 
 
-def to_range_arrays(ranges: DataFrame) -> DataFrame:
-    """Array-form triples table (SURVEY.md §1.3): one row per
-    (conv_id, subj, pred, obj) with sorted array<struct<start,end>>,
-    mirroring the reference's even-length sorted long[] ranges.
+def to_range_arrays(
+    ranges: DataFrame, keys=("conv_id", "subj", "pred", "obj")
+) -> DataFrame:
+    """Array-form triples table (SURVEY.md §1.3): one row per `keys`
+    (by default (conv_id, subj, pred, obj)) with sorted
+    array<struct<start,end>>, mirroring the reference's even-length
+    sorted long[] ranges.
     """
-    return ranges.groupBy("conv_id", "subj", "pred", "obj").agg(
+    return ranges.groupBy(*keys).agg(
         F.sort_array(
             F.collect_list(F.struct(
                 F.col("range_start").alias("start"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import release_checkpoint
+
 
 def _distinct_terms(triples: DataFrame) -> DataFrame:
     return (
@@ -120,7 +122,7 @@ def release(dictionary: DataFrame) -> None:
     frame cannot be evaluated afterwards."""
     pinned = getattr(dictionary, "_pinned", None)
     if pinned is not None:
-        pinned._jdf.queryExecution().logical().rdd().unpersist(False)
+        release_checkpoint(pinned)
 
 
 def encode_triples(triples: DataFrame, dictionary: DataFrame) -> DataFrame:

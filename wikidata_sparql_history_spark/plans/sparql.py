@@ -79,8 +79,10 @@ Semantics notes (deviations from full SPARQL 1.1 are explicit):
   is named `_b_<label>` internally and IS projected by SELECT *
   (full SPARQL hides bnode vars from *).
 - SELECT is MULTISET (duplicates preserved) unless DISTINCT is given —
-  per the round-4 advice; the graph itself is still a set (input rows
-  are DISTINCT'd on the three term columns: single-graph semantics).
+  per the round-4 advice; the graph itself is still a set
+  (single-graph semantics). With `index=` (`views.triple_index`, one
+  row per distinct triple) the set is the index's rows; without it,
+  each query DISTINCTs `triples` on the three term columns.
 - BGP = chain of joins on shared variables; join order is textual and
   Catalyst/AQE re-orders (the reference's bind-join selection).
 - OPTIONAL → left outer join on the shared variables (RDF4J LeftJoin);
@@ -96,7 +98,9 @@ Semantics notes (deviations from full SPARQL 1.1 are explicit):
   patterns inside evaluate against views.state_at / additions_at /
   deletions_at(ranges, N) — the reference's temporal named graphs
   (RocksTripleSource.java:107-139, Vocabulary.java REVISION_*
-  namespaces). Requires `ranges=`; variable graph names are rejected.
+  namespaces) — or, with `index=`, against the index rows passing
+  views.revision_test (∃ start ≤ N < end, ∃ start = N, ∃ end = N).
+  Requires `ranges=` or `index=`.
 - Magic predicates: a constant predicate in the schema:/hist: registry
   (schema:about, schema:author (alias hist:author), schema:dateCreated,
   schema:isBasedOn, hist:previousRevision, hist:nextRevision,
@@ -175,7 +179,8 @@ Semantics notes (deviations from full SPARQL 1.1 are explicit):
   dataset clause, top-level SELECT only): the DEFAULT graph becomes
   the union of the named snapshots, so bare patterns evaluate against
   them (RDF4J DatasetImpl semantics). Multiple FROM merge; FROM NAMED
-  and FROM in subqueries are rejected loudly. Requires `ranges=`.
+  and FROM in subqueries are rejected loudly. Requires `ranges=` or
+  `index=`.
 - Aggregates additionally include SAMPLE (deterministic: MIN, the
   same convention as the DataFrame surface's ★agg_group_concat) and
   GROUP_CONCAT with an optional `; SEPARATOR="x"` (sorted-DISTINCT
@@ -1283,16 +1288,17 @@ def _turn_iri(prefix="") -> F.Column:
 
 
 class _Ctx:
-    def __init__(self, triples, ranges, turns, encode_const):
+    def __init__(self, triples, ranges, turns, encode_const, index):
         self.triples = triples
         self.ranges = ranges
         self.turns = turns
         self.encode_const = encode_const
+        self.index = index
         self._sources: dict = {}
 
     @property
     def spark(self):
-        for df in (self.triples, self.ranges, self.turns):
+        for df in (self.triples, self.ranges, self.turns, self.index):
             if df is not None:
                 return df.sparkSession
         raise SparqlError("no DataFrame input to derive a SparkSession from")
@@ -1316,7 +1322,10 @@ class _Ctx:
             key = ("var",)   # var-name-independent; share across blocks
         if key in self._sources:
             return self._sources[key]
-        if graph is None:
+        if graph is None and self.index is not None:
+            # one row per distinct triple: a set with no distinct
+            df = self.index.select("subj", "pred", "obj")
+        elif graph is None:
             if self.triples is None:
                 raise SparqlError(
                     "pattern outside GRAPH needs a default-graph DataFrame")
@@ -1341,6 +1350,11 @@ class _Ctx:
                          F.col("range_end").cast("string")).alias("gctx"),
                 "subj", "pred", "obj")
             df = adds.unionByName(dels).distinct()
+        elif self.index is not None:
+            # the triples with a range passing the context's test: a
+            # subset of a set, so again no distinct
+            df = self.index.filter(views.revision_test(*graph)).select(
+                "subj", "pred", "obj")
         else:
             if self.ranges is None:
                 raise SparqlError("GRAPH blocks need ranges= (the coalesced "
@@ -1888,16 +1902,22 @@ def evaluate(
     ranges: Opt[DataFrame] = None,
     turns: Opt[DataFrame] = None,
     encode_const: Opt[Callable] = None,
+    index: Opt[DataFrame] = None,
 ) -> DataFrame:
     """Evaluate a SPARQL SELECT. `triples` is the default graph
-    (subj, pred, obj) — pass None when every pattern sits inside a
-    GRAPH block. `ranges` enables GRAPH temporal contexts, `turns`
-    enables magic predicates, `encode_const` converts constant terms
-    driver-side (ExprValueConverter analog) for encoded-graph inputs.
-    Returns one column per projected variable (multiset semantics —
-    SELECT DISTINCT dedups)."""
+    (subj, pred, obj), deduplicated per query — pass None when every
+    pattern sits inside a GRAPH block or `index` is given. `ranges`
+    enables GRAPH temporal contexts, `turns` enables magic predicates,
+    `encode_const` converts constant terms driver-side
+    (ExprValueConverter analog) for encoded-graph inputs. `index` is
+    the loaded store's `views.triple_index(ranges)`: when given, it is
+    the default graph (in place of `triples`) and answers
+    GRAPH <rev:global|additions|deletions/N> by a range test on each
+    triple's array, both with no per-query distinct; GRAPH ?g still
+    reads `ranges`. Returns one column per projected variable
+    (multiset semantics — SELECT DISTINCT dedups)."""
     q = parse(query)
-    ctx = _Ctx(triples, ranges, turns, encode_const)
+    ctx = _Ctx(triples, ranges, turns, encode_const, index)
 
     if isinstance(q, AskQuery):
         # boolean result, fully lazy: one row (ask: true|false)

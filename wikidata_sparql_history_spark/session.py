@@ -7,7 +7,8 @@ efficiency measurement.
 
 `local_relation` builds every driver-side relation a session needs
 (the canonical alias map, SPARQL seeds and VALUES) without a Python
-worker.
+worker. `release_checkpoint` drops the blocks a `localCheckpoint()`
+pinned.
 """
 
 from __future__ import annotations
@@ -123,3 +124,11 @@ def local_relation(spark: SparkSession, names, rows, typ: str) -> DataFrame:
     cols = list(zip(*rows)) or [()] * len(names)
     return spark.createDataFrame(pa.table(
         [pa.array(c, _ARROW_TYPES[typ]) for c in cols], names=list(names)))
+
+
+def release_checkpoint(checkpointed: DataFrame) -> None:
+    """Drop the blocks `checkpointed = df.localCheckpoint()` pinned;
+    Spark frees them only when the JVM garbage-collects the plan. Call
+    it once every consumer of `checkpointed` has run: the frame cannot
+    be evaluated afterwards."""
+    checkpointed._jdf.queryExecution().logical().rdd().unpersist(False)

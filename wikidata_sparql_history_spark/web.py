@@ -2,7 +2,8 @@
 
 A stdlib-only WSGI application over a once-loaded materialized store —
 the long-lived-repository behavior the reference's Javalin endpoint
-gets from `HistoryRepository`:
+gets from `HistoryRepository`, including its triple index
+(`views.triple_index`):
 
 - ``GET /sparql?query=...`` and ``POST /sparql`` (form-encoded
   ``query=``, or a raw ``application/sparql-query`` body) evaluate one
@@ -37,7 +38,7 @@ import io
 from urllib.parse import parse_qs
 
 from . import cli
-from .plans import sparql
+from .plans import sparql, views
 
 
 _FORMATS = {
@@ -97,12 +98,15 @@ def _extract_query(environ) -> str | None:
 def make_app(spark, store: str, max_rows: int = 1000):
     """→ WSGI app evaluating SPARQL over the materialized `store`.
     The store loads lazily on the first request and is shared by all
-    subsequent ones (HistoryRepository lifecycle)."""
+    subsequent ones (HistoryRepository lifecycle), as is the store's
+    triple index (`views.triple_index`). The app keeps the index's
+    checkpoint for its lifetime: losing an executor that holds its
+    blocks fails every later request until the process restarts."""
     # lazy init guarded by a lock: under a multi-threaded WSGI server
     # concurrent first requests would otherwise race cli._load (two
-    # redundant store loads). The (triples, ranges, turns) tuple is
-    # built fully, then published by ONE assignment to `loaded`, so a
-    # reader sees either nothing or the whole store.
+    # redundant store loads and indexes). The (ranges, turns, index)
+    # tuple is built fully, then published by ONE assignment to
+    # `loaded`, so a reader sees either nothing or the whole store.
     import threading
 
     _init_lock = threading.Lock()
@@ -114,7 +118,7 @@ def make_app(spark, store: str, max_rows: int = 1000):
             with _init_lock:
                 if loaded is None:
                     ranges, turns = cli._load(spark, store)
-                    loaded = (ranges.select("subj", "pred", "obj"), ranges, turns)
+                    loaded = (ranges, turns, views.triple_index(ranges))
         return loaded
 
     def app(environ, start_response):
@@ -143,10 +147,11 @@ def make_app(spark, store: str, max_rows: int = 1000):
             start_response("400 Bad Request",
                            [("Content-Type", "text/plain")])
             return [b"missing query parameter\n"]
-        triples, ranges, turns = _tables()
+        ranges, turns, index = _tables()
         buf = io.StringIO()
         try:
-            df = sparql.evaluate(triples, query, ranges=ranges, turns=turns)
+            df = sparql.evaluate(None, query, ranges=ranges, turns=turns,
+                                 index=index)
             cli._emit(df, fmt, max_rows, buf)
         except sparql.SparqlError as e:
             # per-request failure: 400 + message, session keeps serving
